@@ -132,13 +132,11 @@ def _dictionary_inputs(spark):
 
 def _run_kg_pipeline(spark, n_pages: int) -> tuple[float, int]:
     """Flagship KG pipeline over the pre-generated bench pages
-    (~50k, FIXTURES.md §2). Returns (seconds, n_pages).
-    KG_FUSED=1 uses the zero-exchange fused plan."""
+    (~50k, FIXTURES.md §2). Returns (seconds, n_pages)."""
     from kg.pipeline import run_pipeline
 
     from kg.session import PIPELINE_SCAN_CONF, scoped_conf
 
-    fused = bool(os.environ.get("KG_FUSED"))
     pages = spark.read.parquet(_bench_pages(spark, n_pages))
     aliases, evecs, comps = _dictionary_inputs(spark)
     t0 = time.monotonic()
@@ -146,9 +144,7 @@ def _run_kg_pipeline(spark, n_pages: int) -> tuple[float, int]:
     # happens at action time, so the write must sit inside the scope);
     # relational queries keep the 128m session default
     with scoped_conf(spark, PIPELINE_SCAN_CONF):
-        res = run_pipeline(
-            spark, pages, aliases, evecs, fused=fused, components=comps
-        )
+        res = run_pipeline(spark, pages, aliases, evecs, components=comps)
         res["triples"].write.format("noop").mode("overwrite").save()
     return time.monotonic() - t0, n_pages
 

@@ -144,7 +144,6 @@ def profile_pipeline_stages(n_pages: int = 200_000, n: int = 3) -> None:
     bench._run_kg_pipeline."""
     import bench
     from kg.pipeline import (
-        fused_triples_raw,
         stage_extract,
         stage_linked,
         stage_mentions,
@@ -166,8 +165,6 @@ def profile_pipeline_stages(n_pages: int = 200_000, n: int = 3) -> None:
         linked = stage_linked(mentions, aliases, evecs)
         traw = stage_triples_raw(linked, sents)
         triples = stage_triples(traw, comps)
-        ftraw = fused_triples_raw(sents, aliases, evecs)
-        ftriples = stage_triples(ftraw, comps)
         return {
             "scan_only": pages,
             "extract": text,
@@ -176,7 +173,6 @@ def profile_pipeline_stages(n_pages: int = 200_000, n: int = 3) -> None:
             "linked": linked,
             "triples_raw": traw,
             "triples": triples,
-            "fused_triples": ftriples,
         }
 
     # warm-up full pipeline once

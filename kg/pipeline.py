@@ -1,15 +1,23 @@
-"""End-to-end KG pipeline: K1..K8 composed, with X1 skew salting,
-X2 checkpoint/resume orchestration, and X3 per-partition lineage +
+"""End-to-end KG pipeline: K1..K8, with X1 skew salting, X2
+checkpoint/resume orchestration, and X3 per-partition lineage +
 metrics tables (BASELINE.json:6,14).
 
-Dataflow (every stage boundary is a materialized, resumable table
-when run through the Orchestrator):
+Dataflow (``run_pipeline``; with a checkpoint root every named
+output is a materialized, resumable table):
 
-    pages --K1--> text_extracted --M2/M3--> sentences
-          --M4..M7--> mentions --K3--> candidates --K4--> linked
-          --K5--> pairs --K6--> triples_raw
+    pages(url, html) --one Arrow crossing: K1 extract, M2/M3 split,
+          M4-M7 NER+BIO, K5/K6 pair + relation rules--> matched_pairs
     aliases --K7--> components
-    triples_raw x components --K8--> triples (partitioned by pred)
+    matched_pairs --K3/K4 verdict broadcast joins--> triples_raw
+          x components --K8--> triples (partitioned by pred)
+
+``matched_pairs`` holds rule-matched surfaces, not entity ids, so it
+does not depend on the dictionary: a dictionary update re-runs only
+``components`` and ``triples``. The staged K1..K6 operators
+(``stage_extract`` .. ``stage_triples_raw``) compute the same
+triples_raw one table at a time; they back the driver's
+kg_mentions/kg_linked queries, the streaming path and the turbo-
+versus-staged equality gate.
 """
 
 from __future__ import annotations
@@ -24,7 +32,6 @@ from pyspark.sql import functions as F
 from kg import io
 from kg.extract import html_to_text
 from kg.graph import connected_components, same_as_edges
-from kg.link import candidate_gen, rerank
 from kg.ner.tokenize import split_sentences, tokenize_words
 from kg.relations import extract_relations, pair_gen
 
@@ -162,8 +169,11 @@ def distinct_triples(triples: DataFrame) -> DataFrame:
 class Orchestrator:
     """X2 checkpoint/resume + X3 lineage/metrics.
 
-    Each stage writes its output table under ``root/<stage>`` plus a
-    per-partition metrics table under ``root/_metrics/<stage>``. On
+    ``run_pipeline`` stages three tables through it: ``matched_pairs``
+    (the Arrow crossing's output, a few bytes per match),
+    ``components`` and ``triples``. Each stage writes its output table
+    under ``root/<stage>`` plus a per-partition metrics table under
+    ``root/_metrics/<stage>``, then reads the table back. On
     rerun, a stage whose output exists (parquet _SUCCESS marker) is
     loaded instead of recomputed — the driver is stateless across
     resumes (SURVEY.md §3.2)."""
@@ -226,114 +236,6 @@ class Orchestrator:
         if not io.fs_exists(self.spark, base):
             return None
         return io.read_table(self.spark, os.path.join(base, "*"))
-
-
-# ------------------------------------------------------- fused fast path
-
-
-def fused_triples_raw(
-    sentences: DataFrame, aliases: DataFrame, entity_vecs: DataFrame
-) -> DataFrame:
-    """Zero-exchange triples_raw: spans stay on their sentence row
-    (they were produced there), pairs form via Catalyst nested
-    transforms over the span arrays, and linking is two broadcast
-    joins — the corpus is never shuffled before the final dedup.
-
-    Set-equivalent to the staged K3..K6 path (inner verdict joins
-    commute with pair formation; relation rules read only the text):
-    asserted in tests/test_pipeline.py.
-    """
-    from kg.link import rank_alias_verdicts
-    from kg.ner.model import _detect_spans_udf
-    from kg.relations import CONFIDENCE_THRESHOLD, RELATION_RULES
-
-    spans = sentences.select(
-        "url", "sent_id", "words", _detect_spans_udf(F.col("words")).alias("sp")
-    )
-    n = F.size(F.col("sp.begins"))
-    idx = F.sequence(F.lit(0), n - 1)
-    at = lambda arr, i: F.element_at(F.col(arr), i + 1)
-
-    def pair_struct(i, j):
-        return F.struct(
-            at("sp.ent_types", i).alias("subj_type"),
-            at("sp.begins", i).alias("subj_begin"),
-            at("sp.ends", i).alias("subj_end"),
-            at("sp.ent_types", j).alias("obj_type"),
-            at("sp.begins", j).alias("obj_begin"),
-            at("sp.ends", j).alias("obj_end"),
-        )
-
-    pairs_arr = F.when(
-        n >= 2,
-        F.filter(
-            F.flatten(
-                F.transform(
-                    idx,
-                    lambda i: F.transform(
-                        idx,
-                        lambda j: F.when(i < j, pair_struct(i, j)),
-                    ),
-                )
-            ),
-            lambda p: p.isNotNull(),
-        ),
-    )
-    exploded = spans.select(
-        "url", "sent_id", "words", F.explode(pairs_arr).alias("p")
-    )
-    surface = lambda b, e: F.concat_ws(
-        " ", F.slice(F.col("words"), F.col(b) + 1, F.col(e) - F.col(b))
-    )
-    pe = exploded.select(
-        "url",
-        "sent_id",
-        F.col("p.subj_begin").alias("subj_begin"),
-        F.col("p.subj_end").alias("subj_end"),
-        F.col("p.obj_begin").alias("obj_begin"),
-        F.col("p.obj_end").alias("obj_end"),
-        surface("p.subj_begin", "p.subj_end").alias("subj_surface"),
-        surface("p.obj_begin", "p.obj_end").alias("obj_surface"),
-        F.lower(
-            F.concat_ws(
-                " ",
-                F.slice(
-                    F.col("words"),
-                    F.col("p.subj_end") + 1,
-                    F.greatest(
-                        F.col("p.obj_begin") - F.col("p.subj_end"), F.lit(0)
-                    ),
-                ),
-            )
-        ).alias("between"),
-    )
-    pred_expr = F.lit(None).cast("string")
-    conf_expr = F.lit(None).cast("double")
-    for text, pred, conf in reversed(RELATION_RULES):
-        pred_expr = F.when(F.col("between") == text, F.lit(pred)).otherwise(pred_expr)
-        conf_expr = F.when(F.col("between") == text, F.lit(conf)).otherwise(conf_expr)
-    matched = (
-        pe.withColumn("pred", pred_expr)
-        .withColumn("confidence", conf_expr)
-        .filter(F.col("pred").isNotNull())
-        .filter(F.col("confidence") >= CONFIDENCE_THRESHOLD)
-    )
-    verdict = rank_alias_verdicts(aliases, entity_vecs, k=1)
-    sv = verdict.select(
-        F.col("alias").alias("s_alias"), F.col("entity_id").alias("subj_entity")
-    )
-    ov = verdict.select(
-        F.col("alias").alias("o_alias"), F.col("entity_id").alias("obj_entity")
-    )
-    return (
-        matched.join(
-            F.broadcast(sv), F.lower(F.col("subj_surface")) == F.col("s_alias")
-        )
-        .join(F.broadcast(ov), F.lower(F.col("obj_surface")) == F.col("o_alias"))
-        .select(
-            "subj_entity", "pred", "obj_entity", "url", "sent_id", "confidence"
-        )
-    )
 
 
 # ------------------------------------------- one-crossing turbo path
@@ -424,28 +326,24 @@ def _matched_pairs_gen(batches):
         )
 
 
-def turbo_triples_raw(
-    pages: DataFrame, aliases: DataFrame, entity_vecs: DataFrame
-) -> DataFrame:
-    """triples_raw computed with ONE Arrow crossing over (url, html)
-    and two dictionary broadcast joins — set-identical to the staged
-    K1..K6 composition AND to fused_triples_raw (both asserted in
-    tests/test_pipeline.py): same extraction kernel (byte-identical
-    fast path), same sentence/word splits (Python twins of the
-    Catalyst regexes), same tags (word-memo == forward_tags), same
-    i<j span pairing, same rule table, same inner verdict joins.
-
-    Physically this is the guide-§8 shape: the corpus crosses the
-    Python boundary once as (url, html), only RULE-MATCHED pairs (a
-    tiny fraction of sentences) come back, and nothing corpus-sized
-    is ever shuffled or re-serialized — the staged path's words-array
-    Arrow round trip, mention explode and pair-generation exchange
-    all disappear."""
-    from kg.link import alias_verdicts_local
-
-    matched = pages.select("url", "html").mapInPandas(
+def matched_pairs(pages: DataFrame) -> DataFrame:
+    """The one Arrow crossing: (url, html) -> rule-matched co-sentence
+    surface pairs (``_MATCH_SCHEMA``). Surfaces, not entity ids, so the
+    output is dictionary-independent."""
+    return pages.select("url", "html").mapInPandas(
         _matched_pairs_gen, _MATCH_SCHEMA
     )
+
+
+def link_pairs(
+    matched: DataFrame, aliases: DataFrame, entity_vecs: DataFrame
+) -> DataFrame:
+    """K3/K4 on matched pairs: two inner broadcast joins against the
+    driver-built alias verdict (subject, then object surface) ->
+    triples_raw(subj_entity, pred, obj_entity, url, sent_id,
+    confidence)."""
+    from kg.link import alias_verdicts_local
+
     verdict = alias_verdicts_local(aliases, entity_vecs, k=1)
     sv = verdict.select(
         F.col("alias").alias("s_alias"), F.col("entity_id").alias("subj_entity")
@@ -464,6 +362,26 @@ def turbo_triples_raw(
     )
 
 
+def turbo_triples_raw(
+    pages: DataFrame, aliases: DataFrame, entity_vecs: DataFrame
+) -> DataFrame:
+    """triples_raw computed with ONE Arrow crossing over (url, html)
+    and two dictionary broadcast joins — set-identical to the staged
+    K1..K6 composition (asserted in tests/test_pipeline.py): same
+    extraction kernel (byte-identical fast path), same sentence/word
+    splits (Python twins of the Catalyst regexes), same tags
+    (word-memo == forward_tags), same i<j span pairing, same rule
+    table, same inner verdict joins.
+
+    Physically this is the guide-§8 shape: the corpus crosses the
+    Python boundary once as (url, html), only RULE-MATCHED pairs (a
+    tiny fraction of sentences) come back, and nothing corpus-sized
+    is ever shuffled or re-serialized — the staged path's words-array
+    Arrow round trip, mention explode and pair-generation exchange
+    all disappear."""
+    return link_pairs(matched_pairs(pages), aliases, entity_vecs)
+
+
 # ------------------------------------------------------------ pipeline
 
 
@@ -473,85 +391,38 @@ def run_pipeline(
     aliases: DataFrame,
     entity_vecs: DataFrame,
     checkpoint_root: str | None = None,
-    fused: bool = False,
     components: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """Full K1..K8. With ``checkpoint_root`` every stage is a
-    materialized resumable table; without, it is one lazy plan.
-    ``fused=True`` (lazy only) takes the zero-exchange triples path —
-    the corpus is never shuffled before the final dedup (maximum
-    throughput; stage tables are not produced).
+    """html -> triples as ``matched_pairs`` -> ``components`` ->
+    ``triples`` (module docstring). Without ``checkpoint_root`` this
+    is one lazy plan, ``stage_triples(turbo_triples_raw(...), ...)``.
+    With it, each of the three outputs is a materialized resumable
+    table under ``checkpoint_root/<name>`` (``Orchestrator``), so a
+    rerun skips completed outputs and deleting ``components`` re-links
+    the stored matched pairs without re-running the crossing. Returns
+    those three DataFrames (plus ``_orchestrator`` when checkpointing).
 
     ``components``: pre-built K7 component map. The component map is
     a function of the alias DICTIONARY only (corpus-independent), so
     a production deployment builds it once per dictionary update and
     reuses it across every corpus batch — pass it here to do that;
     None rebuilds it inline."""
-    if fused and not checkpoint_root:
-        sents = stage_sentences(stage_extract(pages))
-        traw = fused_triples_raw(sents, aliases, entity_vecs)
-        comps = components if components is not None else stage_components(aliases)
-        return {"triples": stage_triples(traw, comps), "triples_raw": traw}
-    if checkpoint_root:
-        orch = Orchestrator(spark, checkpoint_root)
-        text = orch.run_stage("text_extracted", lambda: stage_extract(pages))
-        sents = orch.run_stage("sentences", lambda: stage_sentences(text))
-        mentions = orch.run_stage("mentions", lambda: stage_mentions(sents))
-        linked = orch.run_stage(
-            "linked", lambda: stage_linked(mentions, aliases, entity_vecs)
-        )
-        traw = orch.run_stage(
-            "triples_raw", lambda: stage_triples_raw(linked, sents)
-        )
-        comps = orch.run_stage(
-            "components",
-            lambda: components
-            if components is not None
-            else stage_components(aliases),
-        )
-        triples = orch.run_stage(
-            "triples",
-            lambda: stage_triples(traw, comps),
-            partition_by=["pred"],
-        )
-        result = {
-            "text_extracted": text,
-            "sentences": sents,
-            "mentions": mentions,
-            "linked": linked,
-            "triples_raw": traw,
-            "components": comps,
-            "triples": triples,
-            "_orchestrator": orch,
-        }
-    else:
-        # single-path lazy DAG. Stage tables keep their K1..K6 plans
-        # (each is its own lazy consumer — kg_mentions/kg_linked/...
-        # execute exactly the staged operator chain), while `triples`
-        # — the one output the throughput path actually materializes —
-        # takes the one-Arrow-crossing turbo plan (r7, guide §8):
-        # set-identical to stage_triples(stage_triples_raw(...), ...)
-        # by the equivalence gates in tests/test_pipeline.py, but with
-        # no words-array round trip, no mention explode and no
-        # corpus-sized pair-generation exchange. The checkpoint_root
-        # branch above still materializes every staged table (the
-        # resumable production layout).
-        text = stage_extract(pages)
-        sents = stage_sentences(text)
-        mentions = stage_mentions(sents)
-        linked = stage_linked(mentions, aliases, entity_vecs)
-        traw = stage_triples_raw(linked, sents)
-        comps = components if components is not None else stage_components(aliases)
-        triples = stage_triples(
-            turbo_triples_raw(pages, aliases, entity_vecs), comps
-        )
-        result = {
-            "text_extracted": text,
-            "sentences": sents,
-            "mentions": mentions,
-            "linked": linked,
-            "triples_raw": traw,
-            "components": comps,
-            "triples": triples,
-        }
+    orch = Orchestrator(spark, checkpoint_root) if checkpoint_root else None
+
+    def stage(name, fn, partition_by=None):
+        return orch.run_stage(name, fn, partition_by) if orch else fn()
+
+    matched = stage("matched_pairs", lambda: matched_pairs(pages))
+    comps = stage(
+        "components",
+        lambda: components if components is not None else stage_components(aliases),
+    )
+    triples = stage(
+        "triples",
+        lambda: stage_triples(link_pairs(matched, aliases, entity_vecs), comps),
+        partition_by=["pred"],
+    )
+    result = {"matched_pairs": matched, "components": comps, "triples": triples}
+    if orch:
+        result["_orchestrator"] = orch
     return result

@@ -4,15 +4,20 @@
     zip -r pipeline.zip kg
     spark-submit --py-files pipeline.zip main.py \\
         --pages /data/pages_parquet --out /data/kg_out \\
-        [--stage all|text_extracted|sentences|mentions|linked|
-                 triples_raw|components|triples] \\
+        [--stage all|matched_pairs|components|triples] \\
         [--n-pages 50000]  (generate the synthetic fixture instead)
 
+Three stage tables land under --out: ``matched_pairs`` (the one Arrow
+crossing's rule-matched surface pairs), ``components`` (the alias
+dictionary's same-as components) and ``triples`` (partitioned by pred).
 The orchestrator is checkpoint-resumable: rerunning skips completed
 stages (their `_SUCCESS` marker exists), so a killed job continues
 where it stopped. `--stage X` forces recompute of X and everything
-after it by deleting those outputs first. The driver is stateless —
-all state lives in the stage tables (SURVEY.md §3.2).
+after it by deleting those outputs first. `matched_pairs` holds
+surfaces, not entity ids, so after a dictionary update
+`--stage components` re-links the stored pairs without re-running the
+crossing over the pages. The driver is stateless — all state lives in
+the stage tables (SURVEY.md §3.2).
 """
 
 from __future__ import annotations
@@ -22,15 +27,7 @@ import json
 import sys
 import os
 
-STAGE_ORDER = [
-    "text_extracted",
-    "sentences",
-    "mentions",
-    "linked",
-    "triples_raw",
-    "components",
-    "triples",
-]
+STAGE_ORDER = ["matched_pairs", "components", "triples"]
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -39,7 +36,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--n-pages", type=int, default=None,
                     help="generate a synthetic pages fixture of this size")
     ap.add_argument("--out", required=True, help="checkpoint/output root")
-    ap.add_argument("--stage", default="all",
+    ap.add_argument("--stage", default="all", choices=["all", *STAGE_ORDER],
                     help="force recompute from this stage onward")
     ap.add_argument("--noise", type=float, default=0.0)
     args = ap.parse_args(argv)
@@ -51,8 +48,6 @@ def main(argv: list[str] | None = None) -> int:
     spark = build_session(app_name="kg-pipeline")
 
     if args.stage != "all":
-        if args.stage not in STAGE_ORDER:
-            ap.error(f"unknown stage {args.stage!r}; one of {STAGE_ORDER}")
         # Hadoop FS API, not shutil: the checkpoint root may be
         # hdfs:// or s3a:// (os.path would silently no-op there and
         # every stage would be wrongly skipped as complete)

@@ -1,10 +1,12 @@
 """End-to-end gates (BASELINE.json:2,14): triple P/R vs gold, exact
 parity vs the frozen single-node oracle, resume equality, salting."""
 
+import json
 import os
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from kg import fixtures as FX
 from kg.pipeline import run_pipeline, salt_repartition
@@ -74,7 +76,6 @@ def test_resume_equality_after_partial_kill(spark, clean_pages, clean_result):
     identical triple set (kill-and-resume, SURVEY.md §5 layer 4)."""
     root = clean_result["_root"]
     before = _triple_set(clean_result["triples"])
-    shutil.rmtree(os.path.join(root, "triples_raw"))
     shutil.rmtree(os.path.join(root, "triples"))
     res2 = run_pipeline(
         spark,
@@ -84,7 +85,8 @@ def test_resume_equality_after_partial_kill(spark, clean_pages, clean_result):
         checkpoint_root=root,
     )
     skipped = {e["stage"] for e in res2["_orchestrator"].log if e["skipped"]}
-    assert "mentions" in skipped and "linked" in skipped
+    assert {"matched_pairs", "components"} <= skipped
+    assert "triples" not in skipped
     assert _triple_set(res2["triples"]) == before
 
 
@@ -93,7 +95,7 @@ def test_lineage_metrics_written(spark, clean_result):
     assert m is not None
     rows = m.collect()
     stages = {r["stage"] for r in rows}
-    assert {"text_extracted", "mentions", "triples"} <= stages
+    assert {"matched_pairs", "components", "triples"} <= stages
     for r in rows:
         assert r["output_rows"] >= 0
         assert r["wall_ms"] > 0
@@ -117,11 +119,12 @@ def test_salting_preserves_multiset(spark, clean_pages):
     assert n_parts >= 4, f"hot host only spread over {n_parts} partitions"
 
 
-def test_turbo_triples_equal_staged_composition(spark):
+def test_turbo_triples_equal_staged_composition(spark, tmp_path):
     """r7: the one-crossing turbo plan behind the lazy path's
-    `triples` must produce exactly the staged K1..K8 composition's
-    rows — on clean AND noise-injected pages (corrupted surfaces,
-    shifted spans)."""
+    `triples`, and the checkpointed run that stages it as
+    matched_pairs -> components -> triples, must both produce exactly
+    the staged K1..K8 composition's rows — on clean AND
+    noise-injected pages (corrupted surfaces, shifted spans)."""
     from kg.pipeline import (
         stage_components,
         stage_extract,
@@ -133,6 +136,7 @@ def test_turbo_triples_equal_staged_composition(spark):
         turbo_triples_raw,
     )
 
+    cols = ["subj", "pred", "obj", "url", "sent_id", "confidence"]
     aliases, evecs = FX.aliases_df(spark), FX.entity_vecs_df(spark)
     comps = stage_components(aliases)
     for noise in (0.0, 0.05):
@@ -145,9 +149,14 @@ def test_turbo_triples_equal_staged_composition(spark):
             comps,
         )
         turbo = stage_triples(turbo_triples_raw(pages, aliases, evecs), comps)
-        a = set(map(tuple, staged.collect()))
-        b = set(map(tuple, turbo.collect()))
+        ckpt = run_pipeline(
+            spark, pages, aliases, evecs, checkpoint_root=str(tmp_path / f"n{noise}")
+        )["triples"]
+        a = set(map(tuple, staged.select(cols).collect()))
+        b = set(map(tuple, turbo.select(cols).collect()))
+        c = set(map(tuple, ckpt.select(cols).collect()))
         assert a == b, f"noise={noise}: {len(a)} staged vs {len(b)} turbo"
+        assert a == c, f"noise={noise}: {len(a)} staged vs {len(c)} checkpointed"
 
 
 def test_python_split_twins_match_catalyst(spark):
@@ -172,27 +181,35 @@ def test_python_split_twins_match_catalyst(spark):
         assert got == want
 
 
-def test_fused_path_equals_staged(spark, clean_pages):
-    """The zero-exchange fused plan must produce exactly the staged
-    path's triples (inner verdict joins commute with pair formation)."""
-    a = (
-        run_pipeline(
-            spark, clean_pages, FX.aliases_df(spark), FX.entity_vecs_df(spark)
-        )["triples"]
-        .select("subj", "pred", "obj", "url", "sent_id")
-        .distinct()
-    )
-    b = (
-        run_pipeline(
-            spark,
-            clean_pages,
-            FX.aliases_df(spark),
-            FX.entity_vecs_df(spark),
-            fused=True,
-        )["triples"]
-        .select("subj", "pred", "obj", "url", "sent_id")
-        .distinct()
-    )
-    assert a.subtract(b).count() == 0
-    assert b.subtract(a).count() == 0
-    assert a.count() == b.count()
+def test_main_stage_rerun_relinks_without_crossing(spark, tmp_path, capsys):
+    """main.py end to end, in process (build_session's getOrCreate
+    returns the test session): a plain run, then `--stage components`
+    recomputes components and triples from the stored matched_pairs,
+    with the same triples count. A removed stage name is an argparse
+    error."""
+    import main
+
+    argv = ["--n-pages", "100", "--out", str(tmp_path / "kg")]
+
+    def run(*extra):
+        assert main.main(argv + list(extra)) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    # getOrCreate applies build_session's SQL defaults to the shared
+    # session; restore the fixture's shuffle sizing for later tests
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        first = run()
+        second = run("--stage", "components")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    assert [e["stage"] for e in first["stages"]] == main.STAGE_ORDER
+    assert not any(e["skipped"] for e in first["stages"])
+    skipped = {e["stage"]: e["skipped"] for e in second["stages"]}
+    assert skipped == {"matched_pairs": True, "components": False, "triples": False}
+    assert second["triples"] == first["triples"] > 0
+
+    with pytest.raises(SystemExit) as exc:
+        main.main(argv + ["--stage", "mentions"])
+    assert exc.value.code == 2
+    assert "invalid choice: 'mentions'" in capsys.readouterr().err
