@@ -11,7 +11,7 @@ distributed KG builder over Common-Crawl-style web pages:
       -> M2..M7 NER core (subword tokenize, deterministic scorer,
          subword->word alignment, BIO decode)
       -> K3 alias candidate gen (broadcast hash join)
-      -> K4 embedding cosine re-rank (window top-k)
+      -> K4 embedding cosine re-rank (numpy alias verdict, broadcast join)
       -> K5 co-sentence pair gen (self-join)
       -> K6 relation extraction
       -> K7 canonicalization (iterative hash-join connected components)

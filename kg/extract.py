@@ -256,9 +256,12 @@ def extract_text_fast(html: bytes | str) -> str | None:
     return "\n".join(blocks)
 
 
-def extract_text_auto(html: bytes | str) -> str:
+def extract_text_auto(html: bytes | str | None) -> str:
     """Fast path with spec fallback — the extraction kernel every
-    distributed operator uses (identical output by construction)."""
+    distributed operator uses (identical output by construction).
+    A record without payload (null html) extracts to ""."""
+    if html is None:
+        return ""
     out = extract_text_fast(html)
     return extract_text(html) if out is None else out
 

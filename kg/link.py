@@ -7,14 +7,19 @@ join — no shuffle of the 10^12-row mention side. Enforced with an
 explicit ``F.broadcast`` hint (AQE would usually pick it, the hint
 makes it a guarantee).
 
-K4 (BASELINE.json:6 "embedding cosine re-rank"): mention-context
-embeddings come from a deterministic hashed char-3-gram encoder
-(vectorized pandas UDF); candidate entity vectors join in (broadcast
-for dictionary-sized entity sets; flip to shuffle join via
-``broadcast_entities=False`` when the KB is huge). The cosine itself
-is a **pure Catalyst expression** (zip_with + aggregate) — no Python
-in the hot path — and top-k is a window row_number with a
-deterministic (cosine desc, entity_id asc) tie-break.
+K4 (BASELINE.json:6 "embedding cosine re-rank"): the mention encoder
+is a context-free hashed char-3-gram embedding of the lowercased
+surface, so E(surface) == E(alias) and the whole K3+K4 verdict is a
+function of the dictionary alone. ``alias_verdicts_local`` computes it
+once on the driver as one numpy product (aliases x entity vectors) and
+returns a local relation; both pipeline paths link with one broadcast
+join against it (``kg.pipeline.stage_linked``, ``link_pairs``).
+
+``candidate_gen`` + ``rerank`` are the generic per-mention K3/K4
+operators (Arrow embedding UDF, Catalyst zip_with+aggregate cosine,
+window row_number with a (cosine desc, entity_id asc) tie-break).
+They are the independent reference the verdict is gated against in
+tests/test_link.py, bit for bit.
 """
 
 from __future__ import annotations
@@ -64,151 +69,51 @@ def cosine_expr(a: str, b: str):
     )
 
 
-def rank_alias_verdicts(
-    aliases: DataFrame, entity_vecs: DataFrame, k: int = 1
-) -> DataFrame:
-    """K3+K4 fused dictionary path: pre-rank every alias's candidate
-    entities by cosine(E(alias), entity_vec) — computable WITHOUT
-    touching the corpus because the context-free surface encoder
-    lowercases, so E(surface) == E(lower(surface)) == E(alias).
-
-    Returns (alias, entity_id, prior, cosine, rank), dictionary-sized.
-    The corpus then needs exactly ONE broadcast join (see
-    link_mentions), keeping the KG pipeline a single corpus pass."""
-    scored = (
-        aliases.withColumn(
-            "alias_vec", _surface_embedding_udf(F.col("alias"))
-        )
-        .join(F.broadcast(entity_vecs), "entity_id", "inner")
-        .withColumn("cosine", cosine_expr("alias_vec", "embedding"))
-        .drop("alias_vec", "embedding")
-    )
-    w = Window.partitionBy("alias").orderBy(F.desc("cosine"), F.asc("entity_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
 def alias_verdicts_local(
     aliases: DataFrame, entity_vecs: DataFrame, k: int = 1
 ) -> DataFrame:
-    """rank_alias_verdicts computed on the DRIVER (guide §5: the
-    verdict is a pure function of the dictionary — collecting a
-    dictionary-sized table is the same bounded-collect class as the
-    component map) and returned as a local (alias, entity_id)
-    relation. Row-for-row identical to the distributed version
-    (asserted in tests/test_link.py): same float32 products, same
-    left-fold float64 accumulation as Catalyst's zip_with+aggregate,
-    same (cosine desc, entity_id asc) tie-break. The hot-path win is
-    physical: each downstream broadcast build becomes a
-    LocalTableScan instead of re-running an Arrow UDF job + a window
-    exchange per build (measured 2 such jobs per pipeline run)."""
-    # toPandas, not collect(): collect pickles every array cell
-    # through py4j (measured 286 ms for the entity vectors alone);
-    # the Arrow path moves the same rows in ~30 ms. Under a vanilla
-    # session without Arrow it silently falls back to the same values.
-    alias_pdf = aliases.select("alias", "entity_id").toPandas()
+    """The K3+K4 verdict: each alias's top-``k`` candidate entities by
+    cosine(E(alias), entity_vec), ties broken by entity_id ascending.
+
+    Returns ``(entity_id long, alias string, prior double, cosine
+    double, rank int)``, dictionary-sized, built from a pandas frame so
+    it plans a LocalTableScan: every downstream broadcast build is
+    job-free.
+
+    Computed on the driver in one numpy pass. The cosine is the same
+    arithmetic as ``cosine_expr`` (gated bit for bit against
+    ``rerank`` in tests): float32 element products, then a SEQUENTIAL
+    float64 fold — ``np.cumsum`` accumulates left to right, a pairwise
+    ``.sum()`` would not. Driver memory is bounded by the dictionary:
+    aliases x 64 x 4 B for the stacked vectors, plus one embedding per
+    distinct alias."""
+    # toPandas, not collect(): the Arrow path moves array cells without
+    # pickling each one through py4j
+    alias_pdf = aliases.select("alias", "entity_id", "prior").toPandas()
     vec_pdf = entity_vecs.select("entity_id", "embedding").toPandas()
-    vecs = {
-        int(e): np.asarray(v, dtype=np.float32)
-        for e, v in zip(vec_pdf["entity_id"], vec_pdf["embedding"])
-    }
-    emb_cache: dict[str, np.ndarray] = {}
-    scored: dict[str, list[tuple[float, int]]] = {}
-    for a, eid in zip(alias_pdf["alias"], alias_pdf["entity_id"]):
-        ev = vecs.get(int(eid))
-        if ev is None:  # inner join semantics
-            continue
-        av = emb_cache.get(a)
-        if av is None:
-            # mirror the UDF's value path: python float (f64) -> f32
-            av = np.asarray(
-                [float(x) for x in V.surface_embedding(a)], dtype=np.float32
-            )
-            emb_cache[a] = av
-        # Catalyst cosine_expr: per-element float32 multiply, then a
-        # LEFT FOLD into a float64 accumulator (not pairwise numpy sum)
-        prod = av * ev
-        acc = 0.0
-        for x in prod:
-            acc = acc + float(x)
-        scored.setdefault(a, []).append((acc, int(eid)))
-    out = []
-    for a, cands in scored.items():
-        cands.sort(key=lambda t: (-t[0], t[1]))
-        for cos, eid in cands[:k]:
-            out.append((a, eid))
-    spark = aliases.sparkSession
-    # pandas, not a row list: the pandas+Arrow createDataFrame path
-    # plans a LocalTableScan, so the two downstream broadcast builds
-    # (sv/ov in turbo_triples_raw) are job-free — a row list plans an
-    # ExistingRDD whose every broadcast build launches a Python-worker
-    # deserialization job (same fix as fixtures.entity_vecs_df).
-    pdf = pd.DataFrame(
-        {
-            "alias": pd.Series([a for a, _ in out], dtype=object),
-            "entity_id": pd.Series([e for _, e in out], dtype="int64"),
-        }
-    )
-    return spark.createDataFrame(pdf, schema="alias string, entity_id long")
-
-
-def link_mentions(
-    mentions: DataFrame,
-    aliases: DataFrame,
-    entity_vecs: DataFrame,
-    k: int = 1,
-) -> DataFrame:
-    """mentions -> linked in one broadcast hash join against the
-    pre-ranked alias verdicts (the production K3+K4 hot path)."""
-    verdict = rank_alias_verdicts(aliases, entity_vecs, k)
-    return mentions.join(
-        F.broadcast(verdict),
-        F.lower(mentions["surface"]) == verdict["alias"],
-        "inner",
+    m = alias_pdf.merge(vec_pdf, on="entity_id", how="inner")
+    codes, uniq = pd.factorize(m["alias"])
+    alias_vecs = np.array([V.surface_embedding(a) for a in uniq], dtype=np.float32)
+    ent_vecs = np.array(m["embedding"].tolist(), dtype=np.float32)
+    prod = alias_vecs[codes] * ent_vecs
+    m["cosine"] = np.cumsum(prod.astype(np.float64), axis=1)[:, -1]
+    m = m.sort_values(["alias", "cosine", "entity_id"], ascending=[True, False, True])
+    m["rank"] = (m.groupby("alias", sort=False).cumcount() + 1).astype("int32")
+    out = m[m["rank"] <= k][["entity_id", "alias", "prior", "cosine", "rank"]]
+    return aliases.sparkSession.createDataFrame(
+        out,
+        schema="entity_id long, alias string, prior double, cosine double, rank int",
     )
 
 
-def rerank(
-    candidates: DataFrame,
-    entity_vecs: DataFrame,
-    k: int = 1,
-    broadcast_entities: bool = True,
-    by_surface: bool = True,
-) -> DataFrame:
-    """K4: cosine(mention-context vec, entity vec), keep top-k.
-
-    ``by_surface=True`` (default): the mention embedding here is a
-    pure function of the surface form, so cosine AND rank are
-    identical for every mention sharing a surface — score the
-    **distinct (surface, entity_id) pairs** (dictionary-bounded: at a
-    10^12-page corpus this is millions of rows, not trillions) and
-    broadcast the verdicts back onto mentions. The per-mention window
-    path (``by_surface=False``) is what a sentence-contextual encoder
-    would need; both produce identical results for this encoder."""
-    ev = F.broadcast(entity_vecs) if broadcast_entities else entity_vecs
-    if by_surface:
-        pairs = candidates.select("surface", "entity_id").distinct()
-        scored_pairs = (
-            pairs.withColumn(
-                "mention_vec", _surface_embedding_udf(F.col("surface"))
-            )
-            .join(ev, "entity_id", "inner")
-            .withColumn("cosine", cosine_expr("mention_vec", "embedding"))
-            .drop("mention_vec", "embedding")
-        )
-        w = Window.partitionBy("surface").orderBy(
-            F.desc("cosine"), F.asc("entity_id")
-        )
-        verdict = scored_pairs.withColumn(
-            "rank", F.row_number().over(w)
-        ).filter(F.col("rank") <= k)
-        return candidates.join(
-            F.broadcast(verdict), ["surface", "entity_id"], "inner"
-        )
+def rerank(candidates: DataFrame, entity_vecs: DataFrame, k: int = 1) -> DataFrame:
+    """K4 per mention: cosine(mention vec, entity vec), keep top-k by
+    a window over ``mention_id``. The shape a sentence-contextual
+    encoder would need; for the context-free encoder it equals the
+    join against ``alias_verdicts_local``."""
     with_vec = candidates.withColumn(
         "mention_vec", _surface_embedding_udf(F.col("surface"))
-    ).join(ev, "entity_id", "inner")
+    ).join(F.broadcast(entity_vecs), "entity_id", "inner")
     scored = with_vec.withColumn(
         "cosine", cosine_expr("mention_vec", "embedding")
     ).drop("mention_vec", "embedding")

@@ -107,16 +107,22 @@ def stage_mentions(sentences: DataFrame) -> DataFrame:
 
 
 def stage_linked(
-    mentions: DataFrame, aliases: DataFrame, entity_vecs: DataFrame, k: int = 1
+    mentions: DataFrame, aliases: DataFrame, entity_vecs: DataFrame
 ) -> DataFrame:
-    """K3 candidate gen + K4 cosine re-rank, fused to a single
-    broadcast join against pre-ranked alias verdicts (context-free
-    encoder => the verdict is dictionary-computable; see
-    kg.link.rank_alias_verdicts). Equivalent to
+    """K3 candidate gen + K4 cosine re-rank as ONE broadcast join of
+    the mentions against the driver-built alias verdict
+    (``kg.link.alias_verdicts_local``; the context-free encoder makes
+    the verdict a function of the dictionary). Adds the verdict's
+    (entity_id, alias, prior, cosine, rank) columns. Equivalent to
     rerank(candidate_gen(...)) — asserted in tests."""
-    from kg.link import link_mentions
+    from kg.link import alias_verdicts_local
 
-    return link_mentions(mentions, aliases, entity_vecs, k=k)
+    verdict = alias_verdicts_local(aliases, entity_vecs)
+    return mentions.join(
+        F.broadcast(verdict),
+        F.lower(mentions["surface"]) == verdict["alias"],
+        "inner",
+    )
 
 
 def stage_triples_raw(
@@ -284,6 +290,10 @@ def _matched_pairs_gen(batches):
 
     model = _Model.get()
     rules = {t: (p, c) for t, p, c in RELATION_RULES}
+    # word tokens hold no " ", so n between-tokens join to a string of
+    # exactly n " "-separated words: no rule matches a gap wider than
+    # its own word count, and b2 only grows with j
+    max_words = max(len(t.split(" ")) for t, _, _ in RELATION_RULES)
     for b in batches:
         url_o: list[str] = []
         sid_o: list[int] = []
@@ -302,6 +312,8 @@ def _matched_pairs_gen(batches):
                     _t1, b1, e1 = spans[i]
                     for j in range(i + 1, len(spans)):
                         _t2, b2, e2 = spans[j]
+                        if b2 - e1 > max_words:
+                            break
                         between = (
                             " ".join(words[e1:b2]).lower() if b2 > e1 else ""
                         )
@@ -344,7 +356,7 @@ def link_pairs(
     confidence)."""
     from kg.link import alias_verdicts_local
 
-    verdict = alias_verdicts_local(aliases, entity_vecs, k=1)
+    verdict = alias_verdicts_local(aliases, entity_vecs)
     sv = verdict.select(
         F.col("alias").alias("s_alias"), F.col("entity_id").alias("subj_entity")
     )

@@ -196,13 +196,17 @@ def main() -> int:
     mentions.write.parquet(m_path)
     m_m = spark.read.parquet(m_path)
     linked = P.stage_linked(m_m, FX.aliases_df(spark), FX.entity_vecs_df(spark))
+    plink = plan_of(linked)
     check(
-        "link stage: 1 Arrow boundary (surface embedding) + broadcast join",
-        arrow_count(linked) == 1 and "BroadcastHashJoin" in plan_of(linked),
+        "link stage: no Arrow boundary, broadcast join of a local verdict",
+        arrow_count(linked) == 0
+        and "BroadcastHashJoin" in plink
+        and "LocalTableScan" in plink,
     )
     traw = P.stage_triples_raw(linked, sents_m)
-    # K5 self-joins linked, so its (single) Arrow subtree prints twice
-    # in the tree; the relation rules themselves add no Python.
+    # K5 self-joins linked, so linked's subtree prints twice in the
+    # tree; with a Python-free link stage this bound is 0: the relation
+    # rules add no Python.
     check(
         "relation stage adds no Python (Catalyst CASE rules)",
         arrow_count(traw) <= 2 * arrow_count(linked),

@@ -129,6 +129,14 @@ def test_fast_path_identical_or_falls_back():
         assert extract_text_auto(html) == ref, html
 
 
+def test_null_html_extracts_empty():
+    """A record without payload (null html) extracts to "" instead of
+    raising, so one such row cannot fail a task."""
+    from kg.extract import extract_text_auto
+
+    assert extract_text_auto(None) == ""
+
+
 def test_fast_path_covers_fixture(spark, clean_pages):
     """On fixture pages the fast path must actually engage (no silent
     100%-fallback that would erase the optimization) AND match."""

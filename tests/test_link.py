@@ -73,47 +73,23 @@ def test_topk_returns_ranked_candidates(spark):
 
 
 def test_dictionary_path_equals_generic_rerank(spark):
-    """The fused K3+K4 dictionary path (pre-ranked alias verdicts,
-    one broadcast join) must produce exactly the generic
-    candidate_gen + per-mention rerank links."""
-    from kg.link import link_mentions
+    """The one verdict (alias_verdicts_local, joined on the lowercase
+    surface) must produce exactly the generic candidate_gen +
+    per-mention rerank links at every k — every dictionary alias plus
+    one unknown surface as mentions. Exact cosine equality gates that
+    the numpy fold is Catalyst's zip_with+aggregate arithmetic."""
+    from kg.link import alias_verdicts_local
 
-    m = _mentions_df(
-        spark, ["Quellix", "Novari Labs", "Valdoria", "Alinda Varek"]
-    )
-    a = link_mentions(m, aliases_df(spark), entity_vecs_df(spark)).select(
-        "mention_id", "entity_id", "rank"
-    )
-    b = rerank(
-        candidate_gen(m, aliases_df(spark)),
-        entity_vecs_df(spark),
-        by_surface=False,
-    ).select("mention_id", "entity_id", "rank")
-    assert a.subtract(b).count() == 0
-    assert b.subtract(a).count() == 0
-    assert a.count() == b.count()
-
-
-def test_local_verdict_equals_distributed(spark):
-    """r7: the driver-computed verdict (turbo-path broadcast side)
-    must match the distributed rank_alias_verdicts row-for-row at
-    several k (same float32 products, same left-fold accumulation,
-    same tie-break)."""
-    from kg import fixtures as FX
-    from kg.link import alias_verdicts_local, rank_alias_verdicts
-
-    aliases, evecs = FX.aliases_df(spark), FX.entity_vecs_df(spark)
+    aliases, evecs = aliases_df(spark), entity_vecs_df(spark)
+    surfaces = [r["alias"] for r in aliases.select("alias").distinct().collect()]
+    m = _mentions_df(spark, surfaces + ["Completely Unknown Entity"])
+    cols = ["mention_id", "entity_id", "rank", "cosine"]
     for k in (1, 2, 3):
-        dist = set(
-            map(
-                tuple,
-                rank_alias_verdicts(aliases, evecs, k)
-                .select("alias", "entity_id")
-                .collect(),
-            )
-        )
-        local = set(map(tuple, alias_verdicts_local(aliases, evecs, k).collect()))
-        assert dist == local, f"k={k}"
+        verdict = alias_verdicts_local(aliases, evecs, k=k)
+        a = m.join(verdict, F.lower(m["surface"]) == verdict["alias"]).select(cols)
+        b = rerank(candidate_gen(m, aliases), evecs, k=k).select(cols)
+        got = sorted(map(tuple, a.collect()))
+        assert got == sorted(map(tuple, b.collect())), f"k={k}"
 
 
 def test_broadcast_join_in_plan(spark):

@@ -119,35 +119,38 @@ def test_salting_preserves_multiset(spark, clean_pages):
     assert n_parts >= 4, f"hot host only spread over {n_parts} partitions"
 
 
-def test_turbo_triples_equal_staged_composition(spark, tmp_path):
-    """r7: the one-crossing turbo plan behind the lazy path's
-    `triples`, and the checkpointed run that stages it as
-    matched_pairs -> components -> triples, must both produce exactly
-    the staged K1..K8 composition's rows — on clean AND
-    noise-injected pages (corrupted surfaces, shifted spans)."""
+def _staged_triples(pages, aliases, evecs, comps):
+    """The staged K1..K8 composition: the oracle for the turbo plan."""
     from kg.pipeline import (
-        stage_components,
         stage_extract,
         stage_linked,
         stage_mentions,
         stage_sentences,
         stage_triples,
         stage_triples_raw,
-        turbo_triples_raw,
     )
+
+    sents = stage_sentences(stage_extract(pages))
+    return stage_triples(
+        stage_triples_raw(stage_linked(stage_mentions(sents), aliases, evecs), sents),
+        comps,
+    )
+
+
+def test_turbo_triples_equal_staged_composition(spark, tmp_path):
+    """r7: the one-crossing turbo plan behind the lazy path's
+    `triples`, and the checkpointed run that stages it as
+    matched_pairs -> components -> triples, must both produce exactly
+    the staged K1..K8 composition's rows — on clean AND
+    noise-injected pages (corrupted surfaces, shifted spans)."""
+    from kg.pipeline import stage_components, stage_triples, turbo_triples_raw
 
     cols = ["subj", "pred", "obj", "url", "sent_id", "confidence"]
     aliases, evecs = FX.aliases_df(spark), FX.entity_vecs_df(spark)
     comps = stage_components(aliases)
     for noise in (0.0, 0.05):
         pages = FX.gen_pages(spark, 150, seed=11, noise=noise)
-        sents = stage_sentences(stage_extract(pages))
-        staged = stage_triples(
-            stage_triples_raw(
-                stage_linked(stage_mentions(sents), aliases, evecs), sents
-            ),
-            comps,
-        )
+        staged = _staged_triples(pages, aliases, evecs, comps)
         turbo = stage_triples(turbo_triples_raw(pages, aliases, evecs), comps)
         ckpt = run_pipeline(
             spark, pages, aliases, evecs, checkpoint_root=str(tmp_path / f"n{noise}")
@@ -157,6 +160,101 @@ def test_turbo_triples_equal_staged_composition(spark, tmp_path):
         c = set(map(tuple, ckpt.select(cols).collect()))
         assert a == b, f"noise={noise}: {len(a)} staged vs {len(b)} turbo"
         assert a == c, f"noise={noise}: {len(a)} staged vs {len(c)} checkpointed"
+
+
+def test_null_html_row_changes_no_triples(spark, clean_pages):
+    """A payload-less page (null html) neither fails the job nor adds
+    triples, on the lazy run_pipeline and on the staged composition."""
+    from kg.pipeline import stage_components
+
+    null_page = spark.createDataFrame(
+        [("https://null.example.com/p", None, None, None, "en")],
+        FX.PAGES_SCHEMA,
+    )
+    pages = clean_pages.unionByName(null_page)
+    aliases, evecs = FX.aliases_df(spark), FX.entity_vecs_df(spark)
+    want = _triple_set(run_pipeline(spark, clean_pages, aliases, evecs)["triples"])
+    lazy = run_pipeline(spark, pages, aliases, evecs)["triples"]
+    assert _triple_set(lazy) == want
+    staged = _staged_triples(pages, aliases, evecs, stage_components(aliases))
+    assert _triple_set(staged) == want
+
+
+_LIST_SHAPES = [
+    ("PER", "works at", "ORG"),
+    ("PER", "visited", "LOC"),
+    ("ORG", "is based in", "LOC"),
+    ("PER", "met", "PER"),
+]
+
+
+def _list_page_html(n_pairs, seed):
+    """A one-sentence page naming 2 * n_pairs registry surfaces: each
+    pair joined by a relation rule's words, pairs separated by commas,
+    so span gaps fall on both sides of the widest rule."""
+    import random
+    from html import escape
+
+    by_type = FX._registry_by_type()
+    rng = random.Random(seed)
+    words = []
+    for k in range(n_pairs):
+        subj, between, obj = rng.choice(_LIST_SHAPES)
+        if k:
+            words.append(",")
+        words += rng.choice(by_type[subj])["surface"].split()
+        words += between.split()
+        words += rng.choice(by_type[obj])["surface"].split()
+    sentence = escape(" ".join(words + ["."]))
+    return f"<html><body><p>{sentence}</p></body></html>".encode()
+
+
+def test_long_sentence_turbo_equals_staged(spark):
+    """The crossing's pair loop stops once a span gap exceeds the
+    widest rule; on a ~300-span sentence its triples still equal the
+    staged composition's, which pairs every span."""
+    import pandas as pd
+
+    from kg.pipeline import stage_components, stage_triples, turbo_triples_raw
+
+    pages = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "url": [f"https://lists.example.net/l/{s}" for s in (1, 2)],
+                "warc_ts": [None, None],
+                "html": [_list_page_html(150, seed=s) for s in (1, 2)],
+                "text": [None, None],
+                "lang": ["en", "en"],
+            }
+        ),
+        FX.PAGES_SCHEMA,
+    )
+    aliases, evecs = FX.aliases_df(spark), FX.entity_vecs_df(spark)
+    comps = stage_components(aliases)
+    staged = _triple_set(_staged_triples(pages, aliases, evecs, comps))
+    turbo = _triple_set(
+        stage_triples(turbo_triples_raw(pages, aliases, evecs), comps)
+    )
+    assert len(staged) > 100
+    assert turbo == staged
+
+
+def test_long_sentence_crossing_is_bounded():
+    """A ~1500-span sentence costs the crossing milliseconds, not the
+    O(spans^2 x gap) of an unbounded pair loop (~50 s), and every
+    rule-joined pair still matches."""
+    import time
+
+    import pandas as pd
+
+    from kg.pipeline import _matched_pairs_gen
+
+    batch = pd.DataFrame({"url": ["u"], "html": [_list_page_html(750, seed=3)]})
+    t0 = time.monotonic()
+    out = pd.concat(list(_matched_pairs_gen(iter([batch]))))
+    elapsed = time.monotonic() - t0
+    assert len(out) == 750
+    assert elapsed < 10, f"{elapsed:.1f} s"
 
 
 def test_python_split_twins_match_catalyst(spark):
