@@ -92,6 +92,33 @@ def test_dictionary_path_equals_generic_rerank(spark):
         assert got == sorted(map(tuple, b.collect())), f"k={k}"
 
 
+def test_local_verdict_equals_distributed(spark):
+    """The driver-computed verdict must match the same verdict built
+    distributed in Catalyst (Arrow embedding UDF over each alias,
+    zip_with+aggregate cosine, window rank over alias) row for row at
+    several k: same float32 products, same left-fold accumulation,
+    same (cosine desc, entity_id asc) tie-break, every cosine bit."""
+    from pyspark.sql import Window
+
+    from kg.link import _surface_embedding_udf, alias_verdicts_local, cosine_expr
+
+    aliases, evecs = aliases_df(spark), entity_vecs_df(spark)
+    scored = (
+        aliases.withColumn("alias_vec", _surface_embedding_udf(F.col("alias")))
+        .join(F.broadcast(evecs), "entity_id", "inner")
+        .withColumn("cosine", cosine_expr("alias_vec", "embedding"))
+    )
+    w = Window.partitionBy("alias").orderBy(F.desc("cosine"), F.asc("entity_id"))
+    ranked = scored.withColumn("rank", F.row_number().over(w))
+    cols = ["alias", "entity_id", "prior", "cosine", "rank"]
+    for k in (1, 2, 3):
+        dist = ranked.filter(F.col("rank") <= k).select(cols)
+        local = alias_verdicts_local(aliases, evecs, k=k).select(cols)
+        got = sorted(map(tuple, local.collect()))
+        assert got, f"k={k}"
+        assert got == sorted(map(tuple, dist.collect())), f"k={k}"
+
+
 def test_broadcast_join_in_plan(spark):
     """K3's broadcast mandate (BASELINE.json:6) shows in the plan."""
     m = _mentions_df(spark, ["Novari Labs"])
