@@ -114,8 +114,7 @@ def _dictionary_inputs(spark):
     from kg.pipeline import stage_components
 
     # applicationId, not id(spark): CPython reuses ids after GC, so a
-    # rebuilt session could be served DataFrames bound to a stopped
-    # one (the same staleness class fixed for kg.relational._BUCKETED)
+    # rebuilt session could be served DataFrames bound to a stopped one
     key = spark.sparkContext.applicationId
     if key not in _DICT_CACHE:
         # one-entry cache (r4 advice): a different applicationId means

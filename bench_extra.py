@@ -137,61 +137,6 @@ def profile_minhash(neutral: bool = True, n: int = 3) -> None:
         )
 
 
-def profile_pipeline_stages(n_pages: int = 200_000, n: int = 3) -> None:
-    """Noop-sink timing of each pipeline PREFIX (guide §1.4): the
-    delta between consecutive prefixes is that stage's marginal cost
-    in the one-pass plan. Uses the same fixture + scoped conf as
-    bench._run_kg_pipeline."""
-    import bench
-    from kg.pipeline import (
-        stage_extract,
-        stage_linked,
-        stage_mentions,
-        stage_sentences,
-        stage_triples,
-        stage_triples_raw,
-    )
-    from kg.session import PIPELINE_SCAN_CONF, scoped_conf
-
-    spark = _session()
-    pages_path = bench._bench_pages(spark, n_pages)
-    aliases, evecs, comps = bench._dictionary_inputs(spark)
-
-    def prefixes():
-        pages = spark.read.parquet(pages_path)
-        text = stage_extract(pages)
-        sents = stage_sentences(text)
-        mentions = stage_mentions(sents)
-        linked = stage_linked(mentions, aliases, evecs)
-        traw = stage_triples_raw(linked, sents)
-        triples = stage_triples(traw, comps)
-        return {
-            "scan_only": pages,
-            "extract": text,
-            "sentences": sents,
-            "mentions": mentions,
-            "linked": linked,
-            "triples_raw": traw,
-            "triples": triples,
-        }
-
-    # warm-up full pipeline once
-    with scoped_conf(spark, PIPELINE_SCAN_CONF):
-        prefixes()["triples"].write.format("noop").mode("overwrite").save()
-    for name, df in prefixes().items():
-        times = []
-        for i in range(n):
-            spark.sparkContext.setJobDescription(f"prefix {name} run {i}")
-            t0 = time.monotonic()
-            with scoped_conf(spark, PIPELINE_SCAN_CONF):
-                df.write.format("noop").mode("overwrite").save()
-            times.append(time.monotonic() - t0)
-        print(
-            f"{name:16s} min {min(times):6.3f}s  "
-            f"samples {[round(t, 3) for t in times]}  load {_load1():.1f}"
-        )
-
-
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "plans"
     if cmd == "plans":
@@ -209,9 +154,4 @@ if __name__ == "__main__":
         profile_minhash(
             neutral=(sys.argv[2] != "xxh64") if len(sys.argv) > 2 else True,
             n=int(sys.argv[3]) if len(sys.argv) > 3 else 3,
-        )
-    elif cmd == "stages":
-        profile_pipeline_stages(
-            int(sys.argv[2]) if len(sys.argv) > 2 else 200_000,
-            int(sys.argv[3]) if len(sys.argv) > 3 else 3,
         )

@@ -1,7 +1,7 @@
 """Training-data curation operators beyond the dedup/ANN families:
 chunking for context-window packing, vocabulary building, stratified
 deterministic sampling, PII scrubbing, repetition scoring, BPE
-merge-pair counting, and a bigram LM table.
+merge training, and a bigram LM table.
 
 All are pure Catalyst (no Python in the plan) with exact DuckDB
 oracles, and each one's scale story is a single shuffle or none:
@@ -15,8 +15,8 @@ oracles, and each one's scale story is a single shuffle or none:
   * PII scrub       — per-row regexp_replace chain, NO shuffle
   * repetition      — per-row token histogram via explode + two-level
                       agg keyed on (doc_id, token) then doc_id
-  * BPE pairs       — shuffle carries distinct char pairs
-                      (alphabet^2-bounded), never corpus positions
+  * BPE merges      — one corpus pass builds the word vocab; every
+                      merge round aggregates the dictionary only
   * bigram LM       — two aggs keyed on tokens, never positions
 """
 
@@ -668,26 +668,6 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- tokenizer-training support
 
 
-def bpe_pair_counts(docs: DataFrame, k: int = 50) -> DataFrame:
-    """First sweep of BPE tokenizer training: corpus-wide frequency of
-    adjacent CHARACTER pairs within whitespace tokens (the statistic
-    the first merge rule is chosen from). explode(word) ->
-    explode(char pairs) -> partial/final hash agg; the shuffle carries
-    distinct pairs (alphabet^2-bounded), never corpus positions."""
-    words = docs.select(
-        F.explode(ws_tokens(F.col("text"))).alias("w")
-    ).filter(F.length("w") >= 2)
-    # substr with a lambda-bound start needs the SQL expr form
-    # (pyspark's F.substring takes plain ints)
-    pairs = words.select(
-        F.explode(
-            F.expr("transform(sequence(1, length(w) - 1), i -> substr(w, i, 2))")
-        ).alias("pair")
-    )
-    freq = pairs.groupBy("pair").agg(F.count(F.lit(1)).alias("freq"))
-    return _topk_ranked(freq, "pair", k)
-
-
 def bigram_lm(docs: DataFrame, min_count: int = 5) -> DataFrame:
     """Corpus bigram table with conditional probability
     P(next | token) — the n-gram LM / data-quality statistic. Two
@@ -886,8 +866,8 @@ def _bpe_oracle_parts(
     n_merges: int = BPE_MERGE_ROUNDS, max_word_len: int = BPE_MAX_WORD_LEN
 ) -> tuple[str, str]:
     """Unrolled-CTE DuckDB oracle parts for the BPE family — returns
-    (cte_block, merge-rows union tail) so the merges/encode/
-    tokencount oracles assemble from the SAME generated CTEs instead
+    (cte_block, merge-rows union tail) so the merges and encode
+    oracles assemble from the SAME generated CTEs instead
     of reverse-parsing a joined string (the pagerank
     pattern: aggregates are not allowed in recursive CTEs, so each
     round is a generated CTE block). Words are ' '-wrapped
@@ -968,12 +948,12 @@ def _bpe_encode_oracle_sql(
     """
 
 
-# one-entry training memo shared by the three BPE queries: training
-# is ~6 driver-collect rounds + barrier writes, and merges/encode/
-# tokencount all consume the same run — without the memo a
-# check_oracles pass trains three times. Keyed by applicationId so a
-# stopped session's barrier files are never reused (the _BUCKETED
-# pattern); the vocab is barrier-materialized, so reuse is safe.
+# one-entry training memo shared by the two BPE queries: training
+# is ~6 driver-collect rounds + barrier writes, and merges/encode
+# both consume the same run — without the memo a check_oracles pass
+# trains twice. Keyed by applicationId so a stopped session's
+# barrier files are never reused; the vocab is barrier-materialized,
+# so reuse is safe.
 _BPE_TRAIN_CACHE: dict[tuple[str, str, int], tuple] = {}
 
 
@@ -1002,27 +982,6 @@ def q_vocab_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vocab.select(
         "w", F.size("syms").cast("long").alias("n_tokens"), "freq"
     )
-
-
-@query(
-    "vocab_bpe_pairs",
-    f"""
-    WITH words AS (
-      SELECT unnest({sql_ws_tokens("text")}) AS w FROM documents),
-    pairs AS (
-      SELECT substr(w, i, 2) AS pair
-      FROM (SELECT w, unnest(generate_series(1, length(w) - 1)) AS i
-            FROM words WHERE length(w) >= 2)),
-    freq AS (
-      SELECT pair, CAST(COUNT(*) AS BIGINT) AS freq FROM pairs GROUP BY pair)
-    SELECT pair, freq,
-           CAST(ROW_NUMBER() OVER (ORDER BY freq DESC, pair) AS BIGINT) AS rank
-    FROM freq ORDER BY freq DESC, pair LIMIT 50
-    """,
-    extra=True,
-)
-def q_vocab_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bpe_pair_counts(T(spark, sf_dir, "documents"))
 
 
 @query(
@@ -1261,106 +1220,3 @@ def q_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("corpus_mix_domains", _mix_domains_oracle_sql(), extra=True)
 def q_corpus_mix_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mix_domains(T(spark, sf_dir, "documents"))
-
-
-def _bpe_tokencount_oracle_sql(
-    n_merges: int = BPE_MERGE_ROUNDS, max_word_len: int = BPE_MAX_WORD_LEN
-) -> str:
-    """Per-document twin of _bpe_encode_oracle_sql: the same CTE
-    unroll, then every document's eligible words join the encode
-    table and sum."""
-    cte_block, _ = _bpe_oracle_parts(n_merges, max_word_len)
-    return f"""{cte_block},
-    enc AS (
-      SELECT replace(trim(sp), ' ', '') AS w,
-             CAST(len(string_split(trim(sp), ' ')) AS BIGINT) AS n_tokens
-      FROM w{n_merges}),
-    dw AS (
-      SELECT doc_id, unnest({sql_ws_tokens("text")}) AS w FROM documents)
-    SELECT dw.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_words,
-           CAST(SUM(enc.n_tokens) AS BIGINT) AS n_tokens
-    FROM dw JOIN enc ON enc.w = dw.w
-    GROUP BY dw.doc_id
-    """
-
-
-@query("text_bpe_tokencount", _bpe_tokencount_oracle_sql(), extra=True)
-def q_text_bpe_tokencount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenize the corpus with the TRAINED tokenizer: per-document
-    token counts under the learned BPE merges — the number every
-    training-data pipeline needs per document (sequence packing,
-    billing, curriculum). One corpus pass explodes words; the encode
-    table is dictionary-sized and broadcasts into the join, so the
-    only corpus-sized shuffle is the final doc-keyed sum (and words
-    outside the trainer's charset/length filter are excluded on both
-    sides by the inner join). The whole merge derivation rides in the
-    oracle's CTE unroll, so the counts are exact end-to-end."""
-    docs = T(spark, sf_dir, "documents")
-    _, vocab = _bpe_train_cached(spark, sf_dir)
-    enc = vocab.select("w", F.size("syms").cast("long").alias("n_tokens"))
-    dw = docs.select(
-        "doc_id", F.explode(ws_tokens(F.col("text"))).alias("w")
-    )
-    return (
-        dw.join(F.broadcast(enc), "w")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_tokens").alias("n_tokens"),
-        )
-    )
-
-
-# ------------------------------------------- fixed-N per-group sample
-
-SAMPLE_N_PER_LANG = 40
-_SAMPLE_SALTS = 8
-
-
-@query(
-    "corpus_sample_fixed_n",
-    f"""
-    SELECT lang, rank, doc_id FROM (
-      SELECT lang, doc_id,
-             CAST(ROW_NUMBER() OVER (
-               PARTITION BY lang
-               ORDER BY md5(doc_id::VARCHAR), doc_id) AS BIGINT) AS rank
-      FROM documents)
-    WHERE rank <= {SAMPLE_N_PER_LANG}
-    """,
-    extra=True,  # local-only: salted per-group top-k surface
-)
-def q_corpus_sample_fixed_n(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACTLY-N-per-language deterministic sample — bottom-k by md5
-    order (the KMV idea: the k smallest hashes are a uniform sample),
-    computed as a TWO-PHASE salted per-group top-k. A naive
-    per-stratum window puts each language on ONE reducer (a 20 TB
-    language = one task); phase 1 takes the per-(lang, salt) bottom-N
-    across SALTS buckets in parallel, phase 2 re-ranks only the
-    SALTS*N survivors per language — correct because any global
-    bottom-N element is necessarily in its salt bucket's bottom-N
-    (bottom-k is mergeable). The oracle is the single-window form:
-    the salted rewrite must be logically invisible, like
-    q_skew_salted_agg. Complements stratified_sample (rate-based)
-    with the exact-count contract a train/eval split needs."""
-    from pyspark.sql import Window
-
-    docs = T(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        F.md5(F.col("doc_id").cast("string")).alias("_h"),
-        F.pmod(F.xxhash64("doc_id"), F.lit(_SAMPLE_SALTS)).alias("_salt"),
-    )
-    w1 = Window.partitionBy("lang", "_salt").orderBy("_h", "doc_id")
-    survivors = docs.withColumn("_rn1", F.row_number().over(w1)).filter(
-        F.col("_rn1") <= SAMPLE_N_PER_LANG
-    )
-    w2 = Window.partitionBy("lang").orderBy("_h", "doc_id")
-    return (
-        survivors.withColumn(
-            "rank", F.row_number().over(w2).cast("long")
-        )
-        .filter(F.col("rank") <= SAMPLE_N_PER_LANG)
-        .select("lang", "rank", "doc_id")
-    )

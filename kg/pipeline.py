@@ -286,14 +286,13 @@ def _matched_pairs_gen(batches):
     from kg.extract import extract_text_auto
     from kg.ner.bio import decode_bio
     from kg.ner.model import _Model
-    from kg.relations import CONFIDENCE_THRESHOLD, RELATION_RULES
+    from kg.relations import CONFIDENCE_THRESHOLD, MAX_RULE_WORDS, RELATION_RULES
 
     model = _Model.get()
     rules = {t: (p, c) for t, p, c in RELATION_RULES}
-    # word tokens hold no " ", so n between-tokens join to a string of
-    # exactly n " "-separated words: no rule matches a gap wider than
-    # its own word count, and b2 only grows with j
-    max_words = max(len(t.split(" ")) for t, _, _ in RELATION_RULES)
+    # no rule matches a gap wider than MAX_RULE_WORDS, and b2 only
+    # grows with j, so the inner loop can stop at the first such gap
+    max_words = MAX_RULE_WORDS
     for b in batches:
         url_o: list[str] = []
         sid_o: list[int] = []

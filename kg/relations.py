@@ -27,6 +27,13 @@ RELATION_RULES: list[tuple[str, str, float]] = [
 
 CONFIDENCE_THRESHOLD = 0.5
 
+# word tokens hold no " ", so n between-tokens join to a string of
+# exactly n " "-separated words: a pair whose gap (obj_begin -
+# subj_end) is wider than the widest rule matches no rule. Both pair
+# generators drop such pairs, so a sentence with thousands of spans
+# yields O(spans) candidate pairs instead of O(spans^2).
+MAX_RULE_WORDS = max(len(t.split(" ")) for t, _, _ in RELATION_RULES)
+
 
 def pair_gen(linked: DataFrame) -> DataFrame:
     """K5: ordered co-sentence mention pairs (subject textual-first).
@@ -58,7 +65,8 @@ def pair_gen(linked: DataFrame) -> DataFrame:
         F.col("end").alias("obj_end"),
     )
     return m1.join(m2.hint("shuffle_hash"), ["url", "sent_id"], "inner").filter(
-        F.col("subj_begin") < F.col("obj_begin")
+        (F.col("subj_begin") < F.col("obj_begin"))
+        & (F.col("obj_begin") - F.col("subj_end") <= MAX_RULE_WORDS)
     )
 
 
@@ -66,11 +74,13 @@ def pair_gen_grouped(linked: DataFrame) -> DataFrame:
     """K5 hot path: co-sentence pairs via ONE shuffle.
 
     groupBy (url, sent_id) + in-memory pair explosion instead of the
-    self-join: per-sentence mention counts are tiny (explosion is
-    O(k^2) with k<=~10), so one exchange of the linked table replaces
-    two exchanges + a join — and, crucially for a lazy single-action
-    pipeline, the upstream NER DAG executes ONCE instead of once per
-    join side. Requires carry_words mentions (kg.ner.model)."""
+    self-join: per-sentence mention counts are tiny, and the
+    MAX_RULE_WORDS gap bound applies inside the filter, before the
+    explode, so a long sentence yields O(k) rows, not O(k^2). One
+    exchange of the linked table replaces two exchanges + a join —
+    and, crucially for a lazy single-action pipeline, the upstream
+    NER DAG executes ONCE instead of once per join side. Requires
+    carry_words mentions (kg.ner.model)."""
     ms = F.collect_list(
         F.struct("mention_id", "entity_id", "ent_type", "begin", "end")
     ).alias("ms")
@@ -88,7 +98,8 @@ def pair_gen_grouped(linked: DataFrame) -> DataFrame:
                     ),
                 )
             ),
-            lambda p: p["s"]["begin"] < p["o"]["begin"],
+            lambda p: (p["s"]["begin"] < p["o"]["begin"])
+            & (p["o"]["begin"] - p["s"]["end"] <= MAX_RULE_WORDS),
         )
     ).alias("p")
     return grouped.select("url", "sent_id", "words", pair).select(

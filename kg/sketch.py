@@ -318,9 +318,9 @@ def sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside it. Bin index, ranks (ceil(n*q) as (n*qn + qd - 1) DIV
     qd), and cumulative counts are all exact int64; the only float
     arithmetic is the final interpolation, rounded to 4 places with
-    an identical association order in both engines. Contrast with
-    q_table_profile's exact percentiles, which cost a full sort —
-    this is what you run at 100 TB instead."""
+    an identical association order in both engines. Exact
+    percentiles cost a full sort; this is what you run at 100 TB
+    instead."""
     v = T(spark, sf_dir, "lineitem").select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("x")
     )

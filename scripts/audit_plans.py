@@ -109,8 +109,8 @@ def main() -> int:
 
     for name in [
         "q1_pricing_summary", "q6_revenue_filter", "q5_region_revenue",
-        "q_window_topk_orders", "q_sessionize", "q_rollup_lineitem",
-        "q_events_json", "q_doc_stats", "dedup_ngram_jaccard",
+        "q_window_topk_orders", "q_sessionize",
+        "q_events_json", "dedup_ngram_jaccard",
         "ann_bruteforce_topk", "text_quality", "text_fingerprint",
         "text_chunking", "vocab_topk", "corpus_sample_stratified",
         "text_pii_scrub", "text_repetition", "text_decontaminate",
@@ -124,16 +124,6 @@ def main() -> int:
     check(
         "decontaminate is map-only (zero Exchange, zero Join)",
         "Exchange" not in pd_ and "Join" not in pd_,
-    )
-
-    # --- bucketed fact-fact join: shuffle eliminated at write time -------
-    bj2 = R.QUERIES["q_bucketed_join"](spark, sf_dir)
-    pb = plan_of(bj2)
-    join_part = pb.split("HashAggregate")[-1]  # below the final agg
-    check(
-        "bucketed join runs with zero Exchange below the aggregation",
-        "SortMergeJoin" in pb and "Exchange hashpartitioning" not in join_part,
-        join_part[:300],
     )
 
     # --- simhash: token hashing JVM-side, one Arrow crossing -------------
@@ -213,11 +203,11 @@ def main() -> int:
     )
 
     # --- r5 additions -----------------------------------------------------
-    # lm_score / substring dedup / triangles / q17 / mix: all JVM-side,
+    # lm_score / substring dedup / triangles / mix: all JVM-side,
     # no cartesian anywhere, and the intended join strategies appear.
     for name in [
         "text_lm_score", "dedup_substring_ngrams", "graph_triangles",
-        "q17_small_qty_revenue", "corpus_mix_domains",
+        "corpus_mix_domains",
     ]:
         qn = (
             R.QUERIES[name]
@@ -230,11 +220,6 @@ def main() -> int:
             "Python" not in p and "Arrow" not in p
             and "CartesianProduct" not in p,
         )
-    p17 = plan_of(R.QUERIES["q17_small_qty_revenue"](spark, sf_dir))
-    check(
-        "q17 part filter broadcasts into the lineitem scans (semi)",
-        "BroadcastHashJoin" in p17 and "LeftSemi" in p17,
-    )
     pmix = plan_of(R.QUERIES["corpus_mix_domains"](spark, sf_dir))
     check(
         "mix_domains rates join back via broadcast",
@@ -249,16 +234,6 @@ def main() -> int:
         "label propagation stays JVM-side, no cartesian",
         "Python" not in plpa and "CartesianProduct" not in plpa,
     )
-    p18 = plan_of(R.QUERIES["q18_large_orders"](spark, sf_dir))
-    check(
-        "q18 having-filtered agg broadcasts into the join-back",
-        "BroadcastHashJoin" in p18 and "CartesianProduct" not in p18,
-    )
-    p22 = plan_of(R.QUERIES["q22_idle_rich_customers"](spark, sf_dir))
-    check(
-        "q22 NOT EXISTS decorrelates to a hash anti join",
-        "LeftAnti" in p22 and "CartesianProduct" not in p22,
-    )
     pbfs = plan_of(
         __import__("__spark_entry__").all_queries()["graph_bfs_hops"](
             spark, sf_dir
@@ -267,12 +242,6 @@ def main() -> int:
     check(
         "bfs stays JVM-side, no cartesian",
         "Python" not in pbfs and "CartesianProduct" not in pbfs,
-    )
-    psalt = plan_of(R.QUERIES["q_skew_salted_agg"](spark, sf_dir))
-    check(
-        "salted agg keeps both grouping phases (salt then key)",
-        "_salt" in psalt and psalt.count("HashAggregate") >= 4
-        and "Python" not in psalt,
     )
     pbloom = plan_of(R.QUERIES["q_bloom_prune_join"](spark, sf_dir))
     check(
@@ -293,13 +262,6 @@ def main() -> int:
             "Python" not in p and "Arrow" not in p
             and "CartesianProduct" not in p,
         )
-    ppart = plan_of(R.QUERIES["q_partition_pruned_scan"](spark, sf_dir))
-    check(
-        "partitioned scan prunes at planning time (PartitionFilters)",
-        "PartitionFilters: [isnotnull(event_type" in ppart
-        and "event_type" not in ppart.split("ReadSchema")[-1],
-        ppart[-600:],
-    )
 
     # --- r6 additions -----------------------------------------------------
     # multi-n decontamination must keep the single-n shape: every gram
@@ -319,41 +281,8 @@ def main() -> int:
         and "CartesianProduct" not in psa,
     )
 
-    # salted join: the shuffle must key on (k, _salt) — a broadcast or
-    # a salt-free partitioning would erase the skew-spreading
-    import re as _re
-
-    psj = plan_of(all_q["q_skew_salted_join"](spark, sf_dir))
-    check(
-        "salted join shuffles on (k, _salt), not broadcast",
-        "SortMergeJoin" in psj
-        and _re.search(r"hashpartitioning\([^)]*_salt", psj) is not None
-        and "BroadcastHashJoin" not in psj,
-    )
-
     # TPC-H-shape additions: the decorrelated plans must keep their
     # intended physical shapes
-    # Q4: the correlated EXISTS decorrelates to ONE semi join (the fact
-    # is never duplicated the way an inner-join+distinct rewrite would)
-    p4 = plan_of(all_q["q4_priority_exists"](spark, sf_dir))
-    check(
-        "q4 EXISTS is a single LeftSemi join, date filter pushed",
-        "LeftSemi" in p4
-        # the CONCRETE predicate, not just the header: every scan
-        # prints "PushedFilters: []" even when nothing is pushed
-        and "GreaterThanOrEqual(o_orderdate" in p4
-        and "HashAggregate" in p4,
-    )
-    # Q14/Q19: part is dimension-sized — the join must broadcast, and
-    # the whole plan stays JVM-side
-    for nm in ("q14_promo_revenue", "q19_disjunctive_revenue"):
-        pq = plan_of(all_q[nm](spark, sf_dir))
-        check(
-            f"{nm} broadcasts part, no sort-merge, JVM-only",
-            "BroadcastHashJoin" in pq
-            and "SortMergeJoin" not in pq
-            and "Python" not in pq,
-        )
     # Q21: both correlated subqueries collapse into ONE pass — the
     # fact join is consumed once (exactly 3 scans: lineitem, orders,
     # supplier; the join-back formulation plans it twice = 10 scans),
@@ -366,18 +295,6 @@ def main() -> int:
         and "BroadcastHashJoin" in p21
         and p21.count("Scan parquet") == 3,
         f"scans={p21.count('Scan parquet')}",
-    )
-
-    # Q20: like Q21, both nested subqueries collapse into one pass —
-    # exactly 3 scans (lineitem, part, supplier), the qualifier set
-    # probes the supplier dim as a semi join
-    p20 = plan_of(all_q["q20_dominant_supplier"](spark, sf_dir))
-    check(
-        "q20 single-pass (3 scans, semi-join qualifier probe)",
-        p20.count("Scan parquet") == 3
-        and "LeftSemi" in p20
-        and "CartesianProduct" not in p20,
-        f"scans={p20.count('Scan parquet')}",
     )
 
     # streaming near-dup gate: the band computation the STREAM side

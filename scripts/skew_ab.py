@@ -12,9 +12,8 @@ on the same session:
      oversized partition at runtime (zero code changes); thresholds
      are lowered so the ~100 MB test partition trips the same logic
      a multi-GB partition trips at the 256 MB production default
-  C. manual xxhash64 salting (q_skew_salted_join's shape): fact
-     carries a row salt, dim replicates per salt, join keys on
-     (key, salt)
+  C. manual xxhash64 salting: fact carries a row salt, dim
+     replicates per salt, join keys on (key, salt)
 
 Writes one JSON artifact (BENCH/skew_ab_r6.json) with min-of-N times,
 per-sample /proc/loadavg stamps (the bench.py protocol), and whether

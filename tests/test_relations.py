@@ -8,6 +8,8 @@ from kg.relations import extract_relations, pair_gen, pair_gen_grouped
 def _linked_df(spark):
     words = ["Alinda", "Varek", "works", "at", "Novari", "Labs", "."]
     words2 = ["Quellix", "is", "based", "in", "Valdoria", "."]
+    # 4 words between the spans: wider than every rule, so no pair
+    words3 = ["Alinda", "Varek", "met", "with", "old", "friends", "Quellix", "."]
     rows = [
         # (url, sent_id, mention_id, entity_id, ent_type, begin, end, words)
         ("u1", 0, 1, 101, "PER", 0, 2, words),
@@ -15,6 +17,8 @@ def _linked_df(spark):
         ("u2", 3, 3, 202, "ORG", 0, 1, words2),
         ("u2", 3, 4, 301, "LOC", 4, 5, words2),
         ("u3", 1, 5, 102, "PER", 0, 2, words),  # lone mention, no pair
+        ("u4", 2, 6, 101, "PER", 0, 2, words3),
+        ("u4", 2, 7, 202, "ORG", 6, 7, words3),
     ]
     return spark.createDataFrame(
         rows,
@@ -37,6 +41,8 @@ def test_grouped_equals_self_join(spark):
     assert grouped == joined
     assert ("u1", 0, 1, 2) in grouped
     assert not any(r[0] == "u3" for r in grouped)
+    # the 4-word gap exceeds MAX_RULE_WORDS: both generators drop it
+    assert not any(r[0] == "u4" for r in grouped)
 
 
 def test_relations_from_grouped_pairs(spark):

@@ -65,6 +65,8 @@ def test_driver_registry_contract():
     # every driver query that claims an oracle has one registered
     oracles = E.oracle_sql()
     assert "q_set_ops" in oracles and "stream_sliding_value" in oracles
+    # every oracle belongs to a registered query: no orphan SQL twins
+    assert set(oracles) <= set(aq)
 
 
 @pytest.mark.parametrize("n", [0, 1])
