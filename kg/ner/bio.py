@@ -7,12 +7,16 @@ span of the same type; ``O`` or a type change closes; a dangling
 lenient default). Implemented as a vectorized pandas UDF returning an
 array of span structs, then posexplode'd into the mentions table —
 the per-sentence state machine never leaves the Arrow batch.
+``decode_bio_flat`` is the same decode in numpy over many sentences
+at once (the one-crossing kernel's BIO step).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import lru_cache
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,8 +42,8 @@ SPAN_SCHEMA = ArrayType(
 
 # tag string -> (is_B, is_I, type) parsed once per distinct tag: the
 # label vocabulary is tiny and fixed, so the two startswith probes +
-# slice per TOKEN collapse to one dict hit (the decode loop is on the
-# turbo pipeline kernel's per-sentence path). Bounded for safety on
+# slice per TOKEN collapse to one dict hit (the decode loop runs per
+# sentence in the staged NER UDF). Bounded for safety on
 # open vocabularies; a miss just re-parses.
 _TAG_PARSE: dict[str, tuple[bool, bool, str | None]] = {}
 _TAG_PARSE_MAX = 1 << 16
@@ -83,6 +87,51 @@ def decode_bio(tags: list[str]) -> list[tuple[str, int, int]]:
     if open_type is not None:
         spans.append((open_type, begin, len(tags)))
     return spans
+
+
+@lru_cache(maxsize=8)
+def label_tables(labels: tuple[str, ...]) -> tuple[np.ndarray, np.ndarray, list[str]]:
+    """Per label code: is it an ``I-`` tag, and its entity type code
+    (-1 for ``O`` or anything else); plus the type names the codes
+    index. Parsed like ``_parse_tag``; cached, so callers must not
+    mutate the result."""
+    def kind(tag: str) -> str | None:
+        return tag[2:] if tag.startswith(("B-", "I-")) else None
+
+    types = list(dict.fromkeys(t for t in map(kind, labels) if t is not None))
+    is_i = np.array([tag.startswith("I-") for tag in labels], dtype=bool)
+    type_code = np.array(
+        [-1 if kind(tag) is None else types.index(kind(tag)) for tag in labels],
+        dtype=np.int8,
+    )
+    return is_i, type_code, types
+
+
+def decode_bio_flat(
+    codes: np.ndarray, offsets: np.ndarray, labels: list[str]
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``decode_bio`` over many sentences at once: ``codes`` are label
+    codes (indices into ``labels``) of all sentences end to end, and
+    sentence s is ``codes[offsets[s]:offsets[s+1]]``. Returns the spans'
+    flat (begin, end, type code) in sentence order, end exclusive.
+
+    A tag continues the open span iff it is ``I-X`` and the previous
+    tag of the same sentence has type X (``decode_bio``'s open type is
+    always the previous tag's type). Every other non-``O`` tag starts a
+    span, and a span ends at the first later tag that does not continue
+    it: a start, an ``O``, or the next sentence's first tag."""
+    is_i, type_code, _ = label_tables(tuple(labels))
+    n = len(codes)
+    typ = type_code[codes]
+    first = np.zeros(n, dtype=bool)
+    heads = offsets[:-1]
+    first[heads[heads < n]] = True
+    cont = is_i[codes] & ~first
+    cont[1:] &= typ[1:] == typ[:-1]
+    begin = np.flatnonzero((typ >= 0) & ~cont).astype(np.int32)
+    breaks = np.append(np.flatnonzero(~cont), n).astype(np.int32)
+    end = breaks[np.searchsorted(breaks, begin, side="right")]
+    return begin, end, typ[begin]
 
 
 @pandas_udf(SPAN_SCHEMA)

@@ -5,11 +5,17 @@ metrics tables (BASELINE.json:6,14).
 Dataflow (``run_pipeline``; with a checkpoint root every named
 output is a materialized, resumable table):
 
-    pages(url, html) --one Arrow crossing: K1 extract, M2/M3 split,
+    pages(url, html) --one mapInArrow crossing: K1 extract, M2/M3 split,
           M4-M7 NER+BIO, K5/K6 pair + relation rules--> matched_pairs
     aliases --K7--> components
     matched_pairs --K3/K4 verdict broadcast joins--> triples_raw
           x components --K8--> triples (partitioned by pred)
+
+The crossing's kernel is columnar: only extraction loops over pages.
+The sentence and word splits (pyarrow RE2 twins of the Catalyst
+regexes), the tagging (once per distinct word), the BIO decode
+(numpy) and the rule match each run once over a slice of up to
+``KERNEL_SLICE_PAGES`` pages of the Arrow batch.
 
 ``matched_pairs`` holds rule-matched surfaces, not entity ids, so it
 does not depend on the dictionary: a dictionary update re-runs only
@@ -26,8 +32,19 @@ import os
 import re
 import time
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from kg import io
 from kg.extract import html_to_text
@@ -253,10 +270,29 @@ class Orchestrator:
 _PY_SENT_SPLIT = re.compile(r"(?<=[.!?])[ \t\n\x0B\f\r]+|\n+")
 _PY_WORD_SPLIT = re.compile(r"[ \t\n\x0B\f\r]+")
 
-_MATCH_SCHEMA = (
-    "url string, sent_id int, subj_surface string, obj_surface string, "
-    "pred string, confidence double"
+# the lookbehind (?<=[.!?])\s+ of _PY_SENT_SPLIT for RE2, which has
+# none: the punctuation is captured and put back, and the whitespace
+# run after it becomes one "\n" for the \n+ split that follows
+_RE2_SENT_END = r"([.!?])[ \t\n\x0B\f\r]+"
+
+_MATCH_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("sent_id", IntegerType()),
+        StructField("subj_surface", StringType()),
+        StructField("obj_surface", StringType()),
+        StructField("pred", StringType()),
+        StructField("confidence", DoubleType()),
+    ]
 )
+_MATCH_ARROW_SCHEMA = to_arrow_schema(_MATCH_SCHEMA)
+
+# pages per kernel pass: an Arrow batch (up to maxRecordsPerBatch
+# pages) is cut into slices of this many, so the flat word, tag and
+# span arrays a worker holds are bounded by the slice. On fixture
+# pages 1024 runs as fast as 4096 (a slice's fixed cost is ~1 ms) and
+# holds ~10 MB less per worker
+KERNEL_SLICE_PAGES = 1024
 
 
 def split_sentences_py(text: str) -> list[tuple[int, list[str]]]:
@@ -264,7 +300,8 @@ def split_sentences_py(text: str) -> list[tuple[int, list[str]]]:
     (sent_id, words) pairs. sent_id is the posexplode POSITION in the
     split array (empties counted, then dropped), words the \\s+ split
     of the space-trimmed sentence — equality with the Catalyst path is
-    gated in tests/test_pipeline.py."""
+    gated in tests/test_pipeline.py, and the kernel's batch-wide
+    ``_split_columnar`` is fuzzed against it there."""
     out = []
     for sid, raw in enumerate(_PY_SENT_SPLIT.split(text)):
         sent = raw.strip(" ")  # F.trim strips 0x20 only
@@ -274,75 +311,149 @@ def split_sentences_py(text: str) -> list[tuple[int, list[str]]]:
     return out
 
 
-def _matched_pairs_gen(batches):
-    """mapInPandas kernel: html -> rule-matched co-sentence span pairs
+def _join_ranges(words: pa.Array, lo: np.ndarray, hi: np.ndarray) -> pa.Array:
+    """``" ".join(words[lo[k]:hi[k]])`` for every k, as one Arrow
+    string array: ``take`` the words of all ranges end to end, cut them
+    into lists and ``binary_join`` each list."""
+    n = hi - lo
+    offsets = np.zeros(len(n) + 1, dtype=np.int32)
+    np.cumsum(n, out=offsets[1:])
+    idx = np.repeat(lo - offsets[:-1], n) + np.arange(offsets[-1], dtype=np.int32)
+    lists = pa.ListArray.from_arrays(pa.array(offsets), words.take(pa.array(idx)))
+    return pc.binary_join(lists, " ")
+
+
+def _split_columnar(texts: pa.Array) -> tuple[np.ndarray, np.ndarray, pa.Array]:
+    """``split_sentences_py`` over many texts at once: returns each
+    non-empty sentence's page index and sent_id (its position in the
+    page's split, empties counted) as int32, and its words as a list
+    array."""
+    raw = pc.split_pattern_regex(
+        pc.replace_substring_regex(texts, _RE2_SENT_END, "\\1\n"), r"\n+"
+    )
+    page = pc.list_parent_indices(raw).to_numpy().astype(np.int32)
+    pos = np.arange(len(page), dtype=np.int32) - raw.offsets.to_numpy()[page]
+    sents = pc.utf8_trim(pc.list_flatten(raw), " ")
+    keep = pc.greater(pc.binary_length(sents), 0)
+    kept = keep.to_numpy(zero_copy_only=False)
+    # ascii_split_whitespace splits on [ \t\n\x0B\f\r]+ and keeps the
+    # empty tokens at either end, as _PY_WORD_SPLIT does
+    return page[kept], pos[kept], pc.ascii_split_whitespace(sents.filter(keep))
+
+
+def _match_slice(urls: pa.Array, htmls: pa.Array, model, rules) -> pa.RecordBatch:
+    """The kernel on one slice of pages: (url, html) Arrow arrays ->
+    a ``_MATCH_SCHEMA`` RecordBatch, rows in (page, sentence, subject
+    span, object span) order. Only extraction loops over pages; the
+    split, the tagging, the BIO decode and the rule match each run
+    once over the whole slice."""
+    from kg.extract import extract_text_auto
+    from kg.ner import vocab as V
+    from kg.ner.bio import decode_bio_flat
+    from kg.relations import MAX_RULE_WORDS
+
+    keys, preds, confs = rules
+    texts = pa.array([extract_text_auto(h) for h in htmls.to_pylist()], pa.string())
+    page, sent_id, split = _split_columnar(texts)
+    words = pc.list_flatten(split)
+    woff = split.offsets.to_numpy()
+    # tag each distinct word once, then gather the label codes
+    enc = pc.dictionary_encode(words)
+    word_tags = model.tags_of([enc.dictionary.to_pylist()])[0]
+    tag_code = np.array([V.LABEL_TO_ID[t] for t in word_tags], dtype=np.int8)
+    begin, end, _ = decode_bio_flat(tag_code[enc.indices.to_numpy()], woff, V.LABELS)
+    # candidate pairs: span i with span i+k of the same sentence, for
+    # each k that can still leave 1..MAX_RULE_WORDS words between them
+    # (every span in between takes a word); built row-major, so they
+    # come out in (i, j) order
+    sent = (np.searchsorted(woff, begin, side="right") - 1).astype(np.int32)
+    ks = np.arange(1, MAX_RULE_WORDS + 2, dtype=np.int32)
+    i = np.repeat(np.arange(len(begin), dtype=np.int32), len(ks))
+    j = i + np.tile(ks, len(begin))
+    i, j = i[j < len(begin)], j[j < len(begin)]
+    gap = begin[j] - end[i]
+    # (gap 0 joins to "", and no rule text is empty)
+    ok = (sent[i] == sent[j]) & (gap >= 1) & (gap <= MAX_RULE_WORDS)
+    i, j = i[ok], j[ok]
+    between = _join_ranges(words, end[i], begin[j])
+    # an ASCII string lower-cases alike in Arrow and in Python; the
+    # rare others go through str.lower
+    hit = pc.fill_null(pc.index_in(pc.ascii_lower(between), keys), -1).to_numpy()
+    other = np.flatnonzero(~pc.string_is_ascii(between).to_numpy(zero_copy_only=False))
+    if len(other):
+        hit = hit.copy()
+        rule_of = {k: n for n, k in enumerate(keys.to_pylist())}
+        for k, s in zip(other, between.take(pa.array(other)).to_pylist()):
+            hit[k] = rule_of.get(s.lower(), -1)
+    m = np.flatnonzero(hit >= 0)
+    i, j, rule = i[m], j[m], pa.array(hit[m])
+    return pa.RecordBatch.from_arrays(
+        [
+            urls.take(pa.array(page[sent[i]])).cast(pa.string()),
+            pa.array(sent_id[sent[i]], pa.int32()),
+            _join_ranges(words, begin[i], end[i]),
+            _join_ranges(words, begin[j], end[j]),
+            preds.take(rule),
+            confs.take(rule),
+        ],
+        schema=_MATCH_ARROW_SCHEMA,
+    )
+
+
+def _matched_pairs_arrow(batches):
+    """mapInArrow kernel: html -> rule-matched co-sentence span pairs
     in ONE JVM<->Python crossing (guide §8: every decision downstream
     of here needs only these few bytes per match — the page text,
     token arrays and unmatched pair space never cross back to the
     JVM, never shuffle). Per-worker state (scorer weights, word-tag
-    memo) initializes once (guide §4.5)."""
-    import pandas as pd
-
-    from kg.extract import extract_text_auto
-    from kg.ner.bio import decode_bio
+    memo) initializes once (guide §4.5). Each Arrow batch is cut into
+    slices of ``KERNEL_SLICE_PAGES`` pages, one output batch each."""
     from kg.ner.model import _Model
-    from kg.relations import CONFIDENCE_THRESHOLD, MAX_RULE_WORDS, RELATION_RULES
+    from kg.relations import CONFIDENCE_THRESHOLD, RELATION_RULES
 
     model = _Model.get()
-    rules = {t: (p, c) for t, p, c in RELATION_RULES}
-    # no rule matches a gap wider than MAX_RULE_WORDS, and b2 only
-    # grows with j, so the inner loop can stop at the first such gap
-    max_words = MAX_RULE_WORDS
+    # the rule dict the per-sentence lookup used (a later duplicate
+    # text wins), less the rules under the confidence threshold
+    table = {t: (p, c) for t, p, c in RELATION_RULES}
+    table = {t: v for t, v in table.items() if v[1] >= CONFIDENCE_THRESHOLD}
+    rules = (
+        pa.array(list(table), pa.string()),
+        pa.array([p for p, _ in table.values()], pa.string()),
+        pa.array([c for _, c in table.values()], pa.float64()),
+    )
     for b in batches:
-        url_o: list[str] = []
-        sid_o: list[int] = []
-        ss_o: list[str] = []
-        os_o: list[str] = []
-        pred_o: list[str] = []
-        conf_o: list[float] = []
-        for url, html in zip(b["url"], b["html"]):
-            text = extract_text_auto(html)
-            for sid, words in split_sentences_py(text):
-                tags = model.tags_of([words])[0]
-                spans = decode_bio(tags)
-                if len(spans) < 2:
-                    continue
-                for i in range(len(spans) - 1):
-                    _t1, b1, e1 = spans[i]
-                    for j in range(i + 1, len(spans)):
-                        _t2, b2, e2 = spans[j]
-                        if b2 - e1 > max_words:
-                            break
-                        between = (
-                            " ".join(words[e1:b2]).lower() if b2 > e1 else ""
-                        )
-                        pc = rules.get(between)
-                        if pc is None or pc[1] < CONFIDENCE_THRESHOLD:
-                            continue
-                        url_o.append(url)
-                        sid_o.append(sid)
-                        ss_o.append(" ".join(words[b1:e1]))
-                        os_o.append(" ".join(words[b2:e2]))
-                        pred_o.append(pc[0])
-                        conf_o.append(pc[1])
-        yield pd.DataFrame(
-            {
-                "url": url_o,
-                "sent_id": sid_o,
-                "subj_surface": ss_o,
-                "obj_surface": os_o,
-                "pred": pred_o,
-                "confidence": conf_o,
-            }
+        urls, htmls = b.column("url"), b.column("html")
+        # a 0-row batch still yields one (empty) output batch
+        for s in range(0, max(b.num_rows, 1), KERNEL_SLICE_PAGES):
+            yield _match_slice(
+                urls.slice(s, KERNEL_SLICE_PAGES),
+                htmls.slice(s, KERNEL_SLICE_PAGES),
+                model,
+                rules,
+            )
+
+
+def _matched_pairs_gen(batches):
+    """The crossing's kernel for pandas callers: (url, html) frames in,
+    ``_MATCH_SCHEMA`` frames out, one per ``KERNEL_SLICE_PAGES`` slice,
+    computed by the same Arrow kernel as ``_matched_pairs_arrow``."""
+    for b in batches:
+        # one pa.array per column: from_pandas on the column selection
+        # took ~0.9 ms per frame, most of a few-page batch's time
+        rb = pa.RecordBatch.from_arrays(
+            [pa.array(b["url"]), pa.array(b["html"])], names=["url", "html"]
         )
+        for out in _matched_pairs_arrow(iter([rb])):
+            yield out.to_pandas()
 
 
 def matched_pairs(pages: DataFrame) -> DataFrame:
     """The one Arrow crossing: (url, html) -> rule-matched co-sentence
-    surface pairs (``_MATCH_SCHEMA``). Surfaces, not entity ids, so the
-    output is dictionary-independent."""
-    return pages.select("url", "html").mapInPandas(
-        _matched_pairs_gen, _MATCH_SCHEMA
+    surface pairs (``_MATCH_SCHEMA``), as ``mapInArrow`` over the
+    columnar kernel ``_matched_pairs_arrow``. Surfaces, not entity ids,
+    so the output is dictionary-independent."""
+    return pages.select("url", "html").mapInArrow(
+        _matched_pairs_arrow, _MATCH_SCHEMA
     )
 
 
@@ -380,9 +491,11 @@ def turbo_triples_raw(
     and two dictionary broadcast joins — set-identical to the staged
     K1..K6 composition (asserted in tests/test_pipeline.py): same
     extraction kernel (byte-identical fast path), same sentence/word
-    splits (Python twins of the Catalyst regexes), same tags
-    (word-memo == forward_tags), same i<j span pairing, same rule
-    table, same inner verdict joins.
+    splits (pyarrow RE2 twins of the Catalyst regexes, fuzzed against
+    ``split_sentences_py``), same tags (word-memo == forward_tags),
+    same BIO spans (``decode_bio_flat`` == ``decode_bio``), the same
+    i<j span pairs that can match a rule, same rule table, same inner
+    verdict joins.
 
     Physically this is the guide-§8 shape: the corpus crosses the
     Python boundary once as (url, html), only RULE-MATCHED pairs (a

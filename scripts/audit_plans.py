@@ -163,7 +163,20 @@ def main() -> int:
 
     def arrow_count(df) -> int:
         p = plan_of(df)
-        return p.count("ArrowEvalPython") + p.count("MapInPandas")
+        return sum(p.count(n) for n in ("ArrowEvalPython", "MapInPandas", "MapInArrow"))
+
+    # the shipped crossing: html -> rule-matched pairs in one Python
+    # boundary, nothing shuffled, and html gone from its output
+    crossing = P.matched_pairs(pages)
+    pcross = plan_of(crossing)
+    check(
+        "matched_pairs: exactly 1 Python boundary, no Exchange, no html out",
+        arrow_count(crossing) == 1
+        and "Python" not in pcross  # no row-at-a-time or other UDF node
+        and "Exchange" not in pcross
+        and "html" not in str(crossing.schema),
+        pcross,
+    )
 
     text = P.stage_extract(pages)
     check("extract stage: exactly 1 Arrow boundary", arrow_count(text) == 1)

@@ -78,3 +78,38 @@ def test_spark_decode_matches_kernel(spark):
         ("u2", 0, "ORG", 0, 2, "Acme Corp"),
         ("u2", 0, "LOC", 3, 4, "Paris"),
     }
+
+
+def test_flat_decode_equals_decode_bio():
+    """The kernel's columnar decode: on 10k seeded tag sequences decoded
+    end to end in one call, each sentence's spans equal decode_bio's.
+    The sequences draw from every label, so they hold dangling I-
+    tags, type switches, sentence-initial I- tags and 1-word
+    sentences; the B/I/type tables come from the label list."""
+    import numpy as np
+
+    from kg.ner.bio import decode_bio_flat, label_tables
+    from kg.ner.vocab import LABELS
+
+    rng = random.Random(11)
+    sents = []
+    for _ in range(10_000):
+        n = rng.choice([1, 1, 2, 3, rng.randint(4, 24)])
+        if rng.random() < 0.5:  # runs of one type, so spans grow long
+            t = rng.choice(["PER", "ORG", "LOC"])
+            pool = [f"B-{t}", f"I-{t}", f"I-{t}", "O"]
+            sents.append([rng.choice(pool) for _ in range(n)])
+        else:
+            sents.append([rng.choice(LABELS) for _ in range(n)])
+    assert {s[0] for s in sents} >= {tag for tag in LABELS if tag.startswith("I-")}
+    code = {tag: k for k, tag in enumerate(LABELS)}
+    codes = np.array([code[tag] for s in sents for tag in s], dtype=np.int8)
+    offsets = np.cumsum([0] + [len(s) for s in sents]).astype(np.int32)
+    begin, end, typ = decode_bio_flat(codes, offsets, LABELS)
+    types = label_tables(tuple(LABELS))[2]
+    sent = np.searchsorted(offsets, begin, side="right") - 1
+    got = [[] for _ in sents]
+    for s, b, e, t in zip(sent, begin, end, typ):
+        got[s].append((types[t], int(b - offsets[s]), int(e - offsets[s])))
+    for s, tags in enumerate(sents):
+        assert got[s] == decode_bio(tags), tags

@@ -279,6 +279,118 @@ def test_python_split_twins_match_catalyst(spark):
         assert got == want
 
 
+def test_columnar_split_equals_python_split_fuzz():
+    """The kernel's batch-wide sentence/word split equals
+    split_sentences_py, sent_id positions included, on 20k seeded
+    strings of ASCII whitespace, .!? runs, whitespace that Java's \\s
+    does not match and unicode letters."""
+    import random
+
+    import pyarrow as pa
+
+    from kg.pipeline import _split_columnar, split_sentences_py
+
+    rng = random.Random(5)
+    parts = [
+        " ", "  ", "\t", "\n", "\n\n", "\x0b", "\x0c", "\r", "\r\n", " \n ",
+        ".", "!", "?", "...", "?!", ". ", ".\n",
+        "\xa0", "\x85", "\u2028", "\u3000", "\x1c",
+        "a", "Bob", "works", "é", "Ünïcode", "東京", "слово", "x.y",
+    ]
+    texts = [
+        "".join(rng.choice(parts) for _ in range(rng.randint(0, 14)))
+        for _ in range(20_000)
+    ]
+    page, sent_id, words = _split_columnar(pa.array(texts, pa.string()))
+    got = [[] for _ in texts]
+    for p, s, w in zip(page.tolist(), sent_id.tolist(), words.to_pylist()):
+        got[p].append((s, w))
+    for text, sents in zip(texts, got):
+        assert sents == split_sentences_py(text), repr(text)
+
+
+def _reference_rows(batch):
+    """The crossing's rows as a per-sentence loop: split_sentences_py,
+    tags_of, decode_bio, then every i < j span pair in order, with the
+    rule lookup on the lower-cased words between them. The loop stops
+    at the first pair wider than the widest rule, which drops no match
+    (test_long_sentence_turbo_equals_staged)."""
+    from kg.extract import extract_text_auto
+    from kg.ner.bio import decode_bio
+    from kg.ner.model import _Model
+    from kg.pipeline import split_sentences_py
+    from kg.relations import CONFIDENCE_THRESHOLD, MAX_RULE_WORDS, RELATION_RULES
+
+    model = _Model.get()
+    rules = {t: (p, c) for t, p, c in RELATION_RULES}
+    rows = []
+    for url, html in zip(batch["url"], batch["html"]):
+        for sid, words in split_sentences_py(extract_text_auto(html)):
+            spans = decode_bio(model.tags_of([words])[0])
+            for i, (_, b1, e1) in enumerate(spans):
+                for _, b2, e2 in spans[i + 1 :]:
+                    if b2 - e1 > MAX_RULE_WORDS:
+                        break
+                    rule = rules.get(" ".join(words[e1:b2]).lower())
+                    if rule is None or rule[1] < CONFIDENCE_THRESHOLD:
+                        continue
+                    rows.append(
+                        (url, sid, " ".join(words[b1:e1]), " ".join(words[b2:e2]))
+                        + rule
+                    )
+    return rows
+
+
+def test_kernel_rows_equal_per_sentence_reference(spark, monkeypatch):
+    """The columnar kernel yields the per-sentence reference's rows in
+    the same order: on 300 fixture pages, clean and noisy, plus a
+    750-span list page, a null-html row, an empty page, a page of
+    punctuation and whitespace only and a rule whose words hold a
+    non-ASCII capital; in one slice and cut into slices
+    of 7 pages. Then on a sentence whose first match skips a span."""
+    import pandas as pd
+
+    from kg import pipeline as P
+
+    # the Kelvin sign is not ASCII, but str.lower maps it to "k"
+    kelvin = "<p>Alinda Marchetti WOR\u212aS AT Novari Labs .</p>".encode()
+    odd = pd.DataFrame(
+        {
+            "url": ["https://x.example/list", "https://x.example/null",
+                    "https://x.example/empty", "https://x.example/punct",
+                    "https://x.example/kelvin"],
+            "html": [_list_page_html(750, seed=3), None, b"",
+                     b"<p> . ! ?\n\t.. ?! </p><div>.</div>", kelvin],
+        }
+    )
+    for noise in (0.0, 0.05):
+        pages = FX.gen_pages(spark, 300, seed=31, noise=noise)
+        batch = pd.concat(
+            [pages.select("url", "html").toPandas(), odd], ignore_index=True
+        )
+        want = _reference_rows(batch)
+        assert len(want) > 750
+        assert want[-1][0] == "https://x.example/kelvin"
+        for slice_pages in (P.KERNEL_SLICE_PAGES, 7):
+            monkeypatch.setattr(P, "KERNEL_SLICE_PAGES", slice_pages)
+            out = pd.concat(list(P._matched_pairs_gen(iter([batch]))))
+            got = list(out.itertuples(index=False, name=None))
+            assert got == want, f"noise={noise} slice={slice_pages}"
+
+    # a tag the fixture tagger never gives: "at" as a location puts a
+    # span inside "works at", so the first match skips a span (j = i + 2)
+    # and must still come out before the adjacent match after it
+    from kg.ner.model import _Model
+
+    monkeypatch.setitem(_Model.get()._word_tag, "at", "B-LOC")
+    html = b"<p>Alinda Marchetti works at Novari Labs , Borvan Varek met Cedrik Sablethorn .</p>"
+    batch = pd.DataFrame({"url": ["https://x.example/skip"], "html": [html]})
+    want = _reference_rows(batch)
+    assert [r[3] for r in want] == ["Novari Labs", "Cedrik Sablethorn"]
+    out = pd.concat(list(P._matched_pairs_gen(iter([batch]))))
+    assert list(out.itertuples(index=False, name=None)) == want
+
+
 def test_main_stage_rerun_relinks_without_crossing(spark, tmp_path, capsys):
     """main.py end to end, in process (build_session's getOrCreate
     returns the test session): a plain run, then `--stage components`
