@@ -107,9 +107,9 @@ def _dictionary_inputs(spark):
     per dictionary update and reuses them across every corpus batch,
     so they are index-build cost, not corpus throughput — excluded
     from the timed section like the input fixture itself
-    (BASELINE.md §6 protocol). The components map is materialized
-    (collected rows -> createDataFrame) so no per-run driver jobs
-    re-derive it."""
+    (BASELINE.md §6 protocol). ``stage_components`` returns the
+    components map already collected to the driver (a KB-sized row
+    list), so no per-run job re-derives it."""
     from kg import fixtures as FX
     from kg.pipeline import stage_components
 
@@ -123,9 +123,7 @@ def _dictionary_inputs(spark):
         _DICT_CACHE.clear()
         aliases = FX.aliases_df(spark)
         evecs = FX.entity_vecs_df(spark)
-        comp_rows = stage_components(aliases).collect()  # KB-sized
-        comps = spark.createDataFrame(comp_rows, "id long, component long")
-        _DICT_CACHE[key] = (aliases, evecs, comps)
+        _DICT_CACHE[key] = (aliases, evecs, stage_components(aliases))
     return _DICT_CACHE[key]
 
 

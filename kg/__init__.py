@@ -14,7 +14,7 @@ distributed KG builder over Common-Crawl-style web pages:
       -> K4 embedding cosine re-rank (numpy alias verdict, broadcast join)
       -> K5 co-sentence pair gen (self-join)
       -> K6 relation extraction
-      -> K7 canonicalization (iterative hash-join connected components)
+      -> K7 canonicalization (same-as union-find in the dictionary compile)
       -> K8 partitioned (subj, pred, obj) triples
 
 Everything is DataFrame-first; Python crosses the JVM boundary only

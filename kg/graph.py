@@ -21,6 +21,7 @@ stand-in for the reference's same-as rules.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -51,34 +52,44 @@ def same_as_edges(aliases: DataFrame) -> DataFrame:
     )
 
 
-def _union_find_components(
-    edges: DataFrame, vertices: DataFrame | None
-) -> DataFrame:
-    """Driver-side union-find for small graphs (same min-id labels as
-    the distributed loop; one collect, one parallelize)."""
-    spark = edges.sparkSession
-    parent: dict[int, int] = {}
+def _union_find(groups, ids=()) -> list[tuple[int, int]]:
+    """(id, component) for every id in ``ids`` or in a group, sorted by
+    id, after merging each group's members: min-id labels, as the
+    distributed loop gives."""
+    parent = {int(v): int(v) for v in ids}
 
     def find(x: int) -> int:
-        parent.setdefault(x, x)
         while parent[x] != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
         return x
 
-    ids = set()
-    for r in edges.collect():
-        a, b = r["src"], r["dst"]
-        ids.add(a)
-        ids.add(b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = min(ra, rb), max(ra, rb)
-            parent[hi] = lo
-    if vertices is not None:
-        ids.update(r["id"] for r in vertices.collect())
-    rows = [(v, find(v)) for v in sorted(ids)]
-    return spark.createDataFrame(rows, "id long, component long")
+    for group in groups:
+        # each root points at the smallest: a root is its set's min id
+        roots = {find(parent.setdefault(int(e), int(e))) for e in group}
+        for r in roots:
+            parent[r] = min(roots)
+    return [(v, find(v)) for v in sorted(parent)]
+
+
+def same_as_components(alias_pdf: pd.DataFrame) -> pd.DataFrame:
+    """``connected_components(same_as_edges(aliases))`` on the driver,
+    from a pandas alias table: a union-find over the entities that
+    share an alias with prior >= SAME_AS_PRIOR. Returns ``(id,
+    component)`` sorted by id."""
+    high = alias_pdf[alias_pdf["prior"] >= SAME_AS_PRIOR]
+    groups = [g for g in high.groupby("alias")["entity_id"].unique() if len(g) > 1]
+    return pd.DataFrame(_union_find(groups), columns=["id", "component"], dtype="int64")
+
+
+def _union_find_components(
+    edges: DataFrame, vertices: DataFrame | None
+) -> DataFrame:
+    """Driver-side union-find for small graphs (same min-id labels as
+    the distributed loop; one collect, one parallelize)."""
+    ids = [] if vertices is None else [r["id"] for r in vertices.collect()]
+    rows = _union_find(((r["src"], r["dst"]) for r in edges.collect()), ids)
+    return edges.sparkSession.createDataFrame(rows, "id long, component long")
 
 
 def connected_components(

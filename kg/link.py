@@ -12,8 +12,9 @@ is a context-free hashed char-3-gram embedding of the lowercased
 surface, so E(surface) == E(alias) and the whole K3+K4 verdict is a
 function of the dictionary alone. ``alias_verdicts_local`` computes it
 once on the driver as one numpy product (aliases x entity vectors) and
-returns a local relation; both pipeline paths link with one broadcast
-join against it (``kg.pipeline.stage_linked``, ``link_pairs``).
+returns a local relation; ``compile_dictionary`` adds each verdict
+entity's same-as component (K7) in the same pass, so the shipped
+``link_pairs`` resolves a surface in one broadcast join per side.
 
 ``candidate_gen`` + ``rerank`` are the generic per-mention K3/K4
 operators (Arrow embedding UDF, Catalyst zip_with+aggregate cosine,
@@ -33,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, FloatType
 
+from kg.graph import same_as_components
 from kg.ner import vocab as V
 
 
@@ -69,6 +71,23 @@ def cosine_expr(a: str, b: str):
     )
 
 
+def _verdicts(alias_pdf: pd.DataFrame, entity_vecs: DataFrame, k: int) -> pd.DataFrame:
+    """``alias_verdicts_local`` as a pandas frame, from a pandas
+    ``(alias, entity_id, prior)`` table."""
+    # toPandas, not collect(): the Arrow path moves array cells without
+    # pickling each one through py4j
+    vec_pdf = entity_vecs.select("entity_id", "embedding").toPandas()
+    m = alias_pdf.merge(vec_pdf, on="entity_id", how="inner")
+    codes, uniq = pd.factorize(m["alias"])
+    alias_vecs = np.array([V.surface_embedding(a) for a in uniq], dtype=np.float32)
+    ent_vecs = np.array(m["embedding"].tolist(), dtype=np.float32)
+    prod = alias_vecs[codes] * ent_vecs
+    m["cosine"] = np.cumsum(prod.astype(np.float64), axis=1)[:, -1]
+    m = m.sort_values(["alias", "cosine", "entity_id"], ascending=[True, False, True])
+    m["rank"] = (m.groupby("alias", sort=False).cumcount() + 1).astype("int32")
+    return m[m["rank"] <= k][["entity_id", "alias", "prior", "cosine", "rank"]]
+
+
 def alias_verdicts_local(
     aliases: DataFrame, entity_vecs: DataFrame, k: int = 1
 ) -> DataFrame:
@@ -87,22 +106,34 @@ def alias_verdicts_local(
     ``.sum()`` would not. Driver memory is bounded by the dictionary:
     aliases x 64 x 4 B for the stacked vectors, plus one embedding per
     distinct alias."""
-    # toPandas, not collect(): the Arrow path moves array cells without
-    # pickling each one through py4j
-    alias_pdf = aliases.select("alias", "entity_id", "prior").toPandas()
-    vec_pdf = entity_vecs.select("entity_id", "embedding").toPandas()
-    m = alias_pdf.merge(vec_pdf, on="entity_id", how="inner")
-    codes, uniq = pd.factorize(m["alias"])
-    alias_vecs = np.array([V.surface_embedding(a) for a in uniq], dtype=np.float32)
-    ent_vecs = np.array(m["embedding"].tolist(), dtype=np.float32)
-    prod = alias_vecs[codes] * ent_vecs
-    m["cosine"] = np.cumsum(prod.astype(np.float64), axis=1)[:, -1]
-    m = m.sort_values(["alias", "cosine", "entity_id"], ascending=[True, False, True])
-    m["rank"] = (m.groupby("alias", sort=False).cumcount() + 1).astype("int32")
-    out = m[m["rank"] <= k][["entity_id", "alias", "prior", "cosine", "rank"]]
     return aliases.sparkSession.createDataFrame(
-        out,
+        _verdicts(aliases.select("alias", "entity_id", "prior").toPandas(), entity_vecs, k),
         schema="entity_id long, alias string, prior double, cosine double, rank int",
+    )
+
+
+def compile_dictionary(
+    aliases: DataFrame, entity_vecs: DataFrame, components: DataFrame | None = None
+) -> DataFrame:
+    """The alias dictionary compiled for linking, in one driver pass:
+    ``(alias string, entity_id long, component long)``, one row per
+    alias: its top-1 entity (the ``alias_verdicts_local`` verdict) and
+    that entity's same-as component (``same_as_components``, or the
+    prebuilt ``components`` map ``(id, component)``; an entity outside
+    every component is its own). Built from a pandas frame, so it plans
+    a LocalTableScan: its rows travel in the plan."""
+    alias_pdf = aliases.select("alias", "entity_id", "prior").toPandas()
+    verdict = _verdicts(alias_pdf, entity_vecs, k=1)
+    if components is None:
+        comps = same_as_components(alias_pdf)
+    else:
+        comps = components.select("id", "component").toPandas()
+    label = dict(zip(comps["id"].tolist(), comps["component"].tolist()))
+    out = verdict[["alias", "entity_id"]].assign(
+        component=[label.get(e, e) for e in verdict["entity_id"].tolist()]
+    )
+    return aliases.sparkSession.createDataFrame(
+        out, schema="alias string, entity_id long, component long"
     )
 
 

@@ -7,9 +7,10 @@ output is a materialized, resumable table):
 
     pages(url, html) --one mapInArrow crossing: K1 extract, M2/M3 split,
           M4-M7 NER+BIO, K5/K6 pair + relation rules--> matched_pairs
-    aliases --K7--> components
-    matched_pairs --K3/K4 verdict broadcast joins--> triples_raw
-          x components --K8--> triples (partitioned by pred)
+    aliases x entity_vecs --driver compile: K3/K4 verdict + K7 same-as
+          components--> components(alias -> entity_id, component)
+    matched_pairs --two broadcast joins (subject, object surface),
+          K8 dedup--> triples (partitioned by pred)
 
 The crossing's kernel is columnar: only extraction loops over pages.
 The sentence and word splits (pyarrow RE2 twins of the Catalyst
@@ -19,9 +20,11 @@ regexes), the tagging (once per distinct word), the BIO decode
 
 ``matched_pairs`` holds rule-matched surfaces, not entity ids, so it
 does not depend on the dictionary: a dictionary update re-runs only
-``components`` and ``triples``. The staged K1..K6 operators
-(``stage_extract`` .. ``stage_triples_raw``) compute the same
-triples_raw one table at a time; they back the driver's
+``components`` and ``triples``. ``components`` is dictionary-sized and
+compiled on the driver (``kg.link.compile_dictionary``), so linking
+and canonicalization are one broadcast join per side. The staged
+K1..K8 operators (``stage_extract`` .. ``stage_triples``) compute the
+same triples one table at a time; they back the driver's
 kg_mentions/kg_linked queries, the streaming path and the turbo-
 versus-staged equality gate.
 """
@@ -49,6 +52,7 @@ from pyspark.sql.types import (
 from kg import io
 from kg.extract import html_to_text
 from kg.graph import connected_components, same_as_edges
+from kg.link import alias_verdicts_local, compile_dictionary
 from kg.ner.tokenize import split_sentences, tokenize_words
 from kg.relations import extract_relations, pair_gen
 
@@ -132,8 +136,6 @@ def stage_linked(
     the verdict a function of the dictionary). Adds the verdict's
     (entity_id, alias, prior, cosine, rank) columns. Equivalent to
     rerank(candidate_gen(...)) — asserted in tests."""
-    from kg.link import alias_verdicts_local
-
     verdict = alias_verdicts_local(aliases, entity_vecs)
     return mentions.join(
         F.broadcast(verdict),
@@ -160,30 +162,26 @@ def stage_components(aliases: DataFrame, registry_ids: DataFrame | None = None) 
     return connected_components(same_as_edges(aliases), vertices=registry_ids)
 
 
+_TRIPLE_KEY = ["subj", "pred", "obj", "url", "sent_id"]
+
+
+def _dedup_triples(df: DataFrame) -> DataFrame:
+    return df.select(*_TRIPLE_KEY, "confidence").dropDuplicates(_TRIPLE_KEY)
+
+
 def stage_triples(triples_raw: DataFrame, components: DataFrame) -> DataFrame:
-    """K8: entity ids -> component ids (two broadcast joins against the
-    component map, which is KB-sized, not corpus-sized), dedup, keep
-    provenance."""
+    """K8 as its own step (``run_pipeline`` folds it into the link
+    joins): entity ids -> component ids (two broadcast joins against
+    the KB-sized component map), dedup, keep provenance."""
     comp = F.broadcast(components)
-    subj_map = comp.select(
-        F.col("id").alias("subj_entity"), F.col("component").alias("subj")
-    )
-    obj_map = comp.select(
-        F.col("id").alias("obj_entity"), F.col("component").alias("obj")
-    )
-    return (
-        triples_raw.join(subj_map, "subj_entity", "left")
-        .join(obj_map, "obj_entity", "left")
-        .withColumn("subj", F.coalesce("subj", "subj_entity"))
-        .withColumn("obj", F.coalesce("obj", "obj_entity"))
-        .select("subj", "pred", "obj", "url", "sent_id", "confidence")
-        .dropDuplicates(["subj", "pred", "obj", "url", "sent_id"])
-    )
 
+    def relabel(df: DataFrame, entity: str, out: str) -> DataFrame:
+        ids = comp.select(F.col("id").alias(entity), F.col("component").alias(out))
+        return df.join(ids, entity, "left").withColumn(out, F.coalesce(out, entity))
 
-def distinct_triples(triples: DataFrame) -> DataFrame:
-    """The KG itself: distinct (subj, pred, obj)."""
-    return triples.select("subj", "pred", "obj").distinct()
+    return _dedup_triples(
+        relabel(relabel(triples_raw, "subj_entity", "subj"), "obj_entity", "obj")
+    )
 
 
 # ------------------------------------------------- X2/X3 orchestration
@@ -457,29 +455,24 @@ def matched_pairs(pages: DataFrame) -> DataFrame:
     )
 
 
-def link_pairs(
-    matched: DataFrame, aliases: DataFrame, entity_vecs: DataFrame
-) -> DataFrame:
-    """K3/K4 on matched pairs: two inner broadcast joins against the
-    driver-built alias verdict (subject, then object surface) ->
-    triples_raw(subj_entity, pred, obj_entity, url, sent_id,
-    confidence)."""
-    from kg.link import alias_verdicts_local
+def link_pairs(matched: DataFrame, dictionary: DataFrame) -> DataFrame:
+    """K3/K4 and K7 on matched pairs: two inner broadcast joins against
+    the compiled dictionary (``kg.link.compile_dictionary``; subject,
+    then object surface) -> (subj_entity, subj, pred, obj_entity, obj,
+    url, sent_id, confidence), where ``subj``/``obj`` are the
+    entities' same-as components."""
 
-    verdict = alias_verdicts_local(aliases, entity_vecs)
-    sv = verdict.select(
-        F.col("alias").alias("s_alias"), F.col("entity_id").alias("subj_entity")
-    )
-    ov = verdict.select(
-        F.col("alias").alias("o_alias"), F.col("entity_id").alias("obj_entity")
-    )
+    def side(p: str):
+        names = (f"{p}_alias", f"{p}_entity", p)
+        d = dictionary.select("alias", "entity_id", "component").toDF(*names)
+        return F.broadcast(d), F.lower(F.col(f"{p}_surface")) == F.col(f"{p}_alias")
+
     return (
-        matched.join(
-            F.broadcast(sv), F.lower(F.col("subj_surface")) == F.col("s_alias")
-        )
-        .join(F.broadcast(ov), F.lower(F.col("obj_surface")) == F.col("o_alias"))
+        matched.join(*side("subj"))
+        .join(*side("obj"))
         .select(
-            "subj_entity", "pred", "obj_entity", "url", "sent_id", "confidence"
+            "subj_entity", "subj", "pred", "obj_entity", "obj", "url",
+            "sent_id", "confidence",
         )
     )
 
@@ -487,23 +480,15 @@ def link_pairs(
 def turbo_triples_raw(
     pages: DataFrame, aliases: DataFrame, entity_vecs: DataFrame
 ) -> DataFrame:
-    """triples_raw computed with ONE Arrow crossing over (url, html)
-    and two dictionary broadcast joins — set-identical to the staged
-    K1..K6 composition (asserted in tests/test_pipeline.py): same
-    extraction kernel (byte-identical fast path), same sentence/word
-    splits (pyarrow RE2 twins of the Catalyst regexes, fuzzed against
-    ``split_sentences_py``), same tags (word-memo == forward_tags),
-    same BIO spans (``decode_bio_flat`` == ``decode_bio``), the same
-    i<j span pairs that can match a rule, same rule table, same inner
-    verdict joins.
-
-    Physically this is the guide-§8 shape: the corpus crosses the
-    Python boundary once as (url, html), only RULE-MATCHED pairs (a
-    tiny fraction of sentences) come back, and nothing corpus-sized
-    is ever shuffled or re-serialized — the staged path's words-array
-    Arrow round trip, mention explode and pair-generation exchange
-    all disappear."""
-    return link_pairs(matched_pairs(pages), aliases, entity_vecs)
+    """triples_raw(subj_entity, pred, obj_entity, url, sent_id,
+    confidence) from ONE Arrow crossing over (url, html) and two
+    dictionary broadcast joins: set-identical to the staged K1..K6
+    composition (asserted in tests/test_pipeline.py). Only rule-matched
+    pairs come back across the Python boundary, and nothing
+    corpus-sized is shuffled or re-serialized."""
+    return link_pairs(
+        matched_pairs(pages), compile_dictionary(aliases, entity_vecs)
+    ).select("subj_entity", "pred", "obj_entity", "url", "sent_id", "confidence")
 
 
 # ------------------------------------------------------------ pipeline
@@ -517,36 +502,39 @@ def run_pipeline(
     checkpoint_root: str | None = None,
     components: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """html -> triples as ``matched_pairs`` -> ``components`` ->
+    """html -> triples as ``matched_pairs`` -> ``components`` (the
+    compiled dictionary, alias -> (entity_id, component)) ->
     ``triples`` (module docstring). Without ``checkpoint_root`` this
-    is one lazy plan, ``stage_triples(turbo_triples_raw(...), ...)``.
-    With it, each of the three outputs is a materialized resumable
-    table under ``checkpoint_root/<name>`` (``Orchestrator``), so a
-    rerun skips completed outputs and deleting ``components`` re-links
-    the stored matched pairs without re-running the crossing. Returns
-    those three DataFrames (plus ``_orchestrator`` when checkpointing).
+    is one lazy plan. With it, each output is a materialized resumable
+    table under ``checkpoint_root/<name>`` (``Orchestrator``): a rerun
+    skips completed outputs, and deleting ``components`` re-links the
+    stored matched pairs without re-running the crossing. Returns the
+    three DataFrames (plus ``_orchestrator`` when checkpointing).
 
-    ``components``: pre-built K7 component map. The component map is
-    a function of the alias DICTIONARY only (corpus-independent), so
-    a production deployment builds it once per dictionary update and
-    reuses it across every corpus batch — pass it here to do that;
-    None rebuilds it inline."""
+    ``components``: a prebuilt K7 map ``(id, component)``
+    (``stage_components``). It depends on the dictionary only, so a
+    deployment builds it once per dictionary update and reuses it for
+    every corpus batch; None derives it in the dictionary compile."""
     orch = Orchestrator(spark, checkpoint_root) if checkpoint_root else None
 
     def stage(name, fn, partition_by=None):
         return orch.run_stage(name, fn, partition_by) if orch else fn()
 
     matched = stage("matched_pairs", lambda: matched_pairs(pages))
-    comps = stage(
-        "components",
-        lambda: components if components is not None else stage_components(aliases),
+    dictionary = stage(
+        "components", lambda: compile_dictionary(aliases, entity_vecs, components)
     )
+    if "alias" not in dictionary.columns:
+        raise ValueError(
+            f"{checkpoint_root}/components is an older (id, component) map, not"
+            " the compiled alias dictionary: rebuild it with --stage components"
+        )
     triples = stage(
         "triples",
-        lambda: stage_triples(link_pairs(matched, aliases, entity_vecs), comps),
+        lambda: _dedup_triples(link_pairs(matched, dictionary)),
         partition_by=["pred"],
     )
-    result = {"matched_pairs": matched, "components": comps, "triples": triples}
+    result = {"matched_pairs": matched, "components": dictionary, "triples": triples}
     if orch:
         result["_orchestrator"] = orch
     return result

@@ -8,8 +8,10 @@
         [--n-pages 50000]  (generate the synthetic fixture instead)
 
 Three stage tables land under --out: ``matched_pairs`` (the one Arrow
-crossing's rule-matched surface pairs), ``components`` (the alias
-dictionary's same-as components) and ``triples`` (partitioned by pred).
+crossing's rule-matched surface pairs), ``components`` (the compiled
+alias dictionary: alias -> (entity_id, component), each alias's
+linked entity and that entity's same-as component) and ``triples``
+(partitioned by pred).
 The orchestrator is checkpoint-resumable: rerunning skips completed
 stages (their `_SUCCESS` marker exists), so a killed job continues
 where it stopped. `--stage X` forces recompute of X and everything

@@ -178,6 +178,27 @@ def main() -> int:
         pcross,
     )
 
+    # the shipped lazy triples: that crossing, one broadcast join per
+    # side against the compiled dictionary (a local relation), and the
+    # dedup as the only hash exchange
+    lazy = P.run_pipeline(
+        spark, pages, FX.aliases_df(spark), FX.entity_vecs_df(spark)
+    )["triples"]
+    plazy = plan_of(lazy)
+    lines = plazy.splitlines()
+    builds = [lines[k + 1] for k, ln in enumerate(lines) if "BroadcastExchange" in ln]
+    check(
+        "lazy triples: 1 Python boundary, 2 broadcast joins of local tables, "
+        "1 hash Exchange",
+        arrow_count(lazy) == 1
+        and "Python" not in plazy
+        and plazy.count("BroadcastHashJoin") == 2
+        and len(builds) == 2
+        and all("+- LocalTableScan" in b for b in builds)
+        and plazy.count("Exchange hashpartitioning") == 1,
+        plazy,
+    )
+
     text = P.stage_extract(pages)
     check("extract stage: exactly 1 Arrow boundary", arrow_count(text) == 1)
     check(

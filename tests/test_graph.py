@@ -38,8 +38,23 @@ def _run(spark, edges, small=0):
 
 
 def test_small_graph_shortcut_matches_distributed(spark):
-    edges = [(1, 2), (2, 3), (10, 11), (5, 3)]
-    assert _run(spark, edges, small=0) == _run(spark, edges, small=10**5)
+    """The driver union-finds label the same edges as the distributed
+    loop: connected_components' small-graph shortcut, and the one the
+    dictionary compile uses (same_as_components), where each edge
+    becomes an alias shared by its two ends."""
+    import pandas as pd
+
+    from kg.graph import SAME_AS_PRIOR, same_as_components
+
+    edges = [(1, 2), (2, 3), (10, 11), (5, 3), (7, 6), (12, 11), (20, 21)]
+    want = _run(spark, edges, small=0)
+    assert _run(spark, edges, small=10**5) == want
+    alias_pdf = pd.DataFrame(
+        [(f"e{a}_{b}", v, SAME_AS_PRIOR) for a, b in edges for v in (a, b)],
+        columns=["alias", "entity_id", "prior"],
+    )
+    got = same_as_components(alias_pdf)
+    assert dict(zip(got["id"], got["component"])) == want
 
 
 def test_chain_graph(spark):

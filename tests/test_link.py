@@ -124,3 +124,79 @@ def test_broadcast_join_in_plan(spark):
     m = _mentions_df(spark, ["Novari Labs"])
     plan = candidate_gen(m, aliases_df(spark))._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+
+
+def _random_dictionary(seed):
+    """A seeded random dictionary in its own entity-id range: random
+    priors (0.5 and the double just below it among them), a chain of
+    shared aliases, a duplicate alias row, an entity without a vector
+    that shares an alias (the smallest id, so it labels its component)
+    and a vector entity with no same-as edge."""
+    import random
+
+    import numpy as np
+
+    rng = random.Random(seed)
+    base = 10_000 * (seed + 1)
+    ents = [base + i for i in range(rng.randint(4, 12))]
+    priors = [0.5, float(np.nextafter(0.5, 0.0)), 0.2, 0.75, 1.0]
+    rows = [
+        (f"d{seed} a{a}", e, rng.choice(priors))
+        for a in range(rng.randint(3, 10))
+        for e in rng.sample(ents, rng.randint(1, 3))
+    ]
+    rows += [(f"d{seed} chain{k}", ents[k + j], 0.5) for k in range(3) for j in (0, 1)]
+    rows.append(rows[0])
+    rows += [(f"d{seed} novec", base - 1, 0.9), (f"d{seed} novec", ents[-1], 0.9)]
+    rows.append((f"d{seed} lone", base + 500, 0.9))
+    vecs = np.random.default_rng(seed).standard_normal((len(ents) + 1, 64))
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    return rows, list(zip(ents + [base + 500], vecs.astype(np.float32).tolist()))
+
+
+def test_compiled_dictionary_equals_catalyst_reference(spark):
+    """compile_dictionary (one driver pass: verdict + union-find) must
+    equal the verdict joined to the distributed same-as components
+    with the component coalesced to the entity id, on the fixture
+    dictionary and on 20 seeded random ones. The dictionaries share no
+    alias and no entity, so one reference over their union holds each
+    one's rows."""
+    import pandas as pd
+
+    from kg.graph import connected_components, same_as_edges
+    from kg.link import alias_verdicts_local, compile_dictionary
+    from kg.pipeline import stage_components
+
+    def frames(rows, vecs):
+        return (
+            spark.createDataFrame(
+                pd.DataFrame(rows, columns=["alias", "entity_id", "prior"]),
+                "alias string, entity_id long, prior double",
+            ),
+            spark.createDataFrame(
+                pd.DataFrame(vecs, columns=["entity_id", "embedding"]),
+                "entity_id long, embedding array<float>",
+            ),
+        )
+
+    fixture = (aliases_df(spark), entity_vecs_df(spark))
+    dicts = [fixture] + [frames(*_random_dictionary(s)) for s in range(20)]
+    aliases, evecs = dicts[0]
+    for a, v in dicts[1:]:
+        aliases, evecs = aliases.unionByName(a), evecs.unionByName(v)
+    comps = connected_components(same_as_edges(aliases))
+    verdict = alias_verdicts_local(aliases, evecs)
+    ref = verdict.join(comps, verdict["entity_id"] == comps["id"], "left").select(
+        "alias", "entity_id", F.coalesce("component", "entity_id")
+    )
+    want = {r[0]: tuple(r) for r in ref.collect()}
+    assert len(want) == sum(a.select("alias").distinct().count() for a, _ in dicts)
+    assert any(r[2] != r[1] for r in want.values())
+
+    got = [sorted(map(tuple, compile_dictionary(a, v).collect())) for a, v in dicts]
+    for rows, (a, _) in zip(got, dicts):
+        assert rows == sorted(want[r[0]] for r in rows)
+        assert len(rows) == a.select("alias").distinct().count()
+    # a prebuilt component map gives the same dictionary
+    prebuilt = compile_dictionary(*fixture, components=stage_components(fixture[0]))
+    assert sorted(map(tuple, prebuilt.collect())) == got[0]

@@ -90,6 +90,23 @@ def test_resume_equality_after_partial_kill(spark, clean_pages, clean_result):
     assert _triple_set(res2["triples"]) == before
 
 
+def test_old_components_checkpoint_names_stage_rerun(spark, tmp_path):
+    """A `components` table in the older (id, component) schema, read
+    back on resume, fails with a ValueError that says how to rebuild
+    it, not inside the link join."""
+    from kg import io
+    from kg.pipeline import stage_components
+
+    root = str(tmp_path / "kg")
+    io.write_table(stage_components(FX.aliases_df(spark)), os.path.join(root, "components"))
+    pages = FX.gen_pages(spark, 5, seed=42, noise=0.0)
+    with pytest.raises(ValueError, match="--stage components"):
+        run_pipeline(
+            spark, pages, FX.aliases_df(spark), FX.entity_vecs_df(spark),
+            checkpoint_root=root,
+        )
+
+
 def test_lineage_metrics_written(spark, clean_result):
     m = clean_result["_orchestrator"].metrics()
     assert m is not None
@@ -138,11 +155,12 @@ def _staged_triples(pages, aliases, evecs, comps):
 
 
 def test_turbo_triples_equal_staged_composition(spark, tmp_path):
-    """r7: the one-crossing turbo plan behind the lazy path's
-    `triples`, and the checkpointed run that stages it as
-    matched_pairs -> components -> triples, must both produce exactly
-    the staged K1..K8 composition's rows — on clean AND
-    noise-injected pages (corrupted surfaces, shifted spans)."""
+    """r7: the one-crossing turbo plan with a separate K8 step, the
+    lazy run_pipeline that links against the compiled dictionary, and
+    the checkpointed run that stages it as matched_pairs -> components
+    -> triples, must all produce exactly the staged K1..K8
+    composition's rows — on clean AND noise-injected pages (corrupted
+    surfaces, shifted spans)."""
     from kg.pipeline import stage_components, stage_triples, turbo_triples_raw
 
     cols = ["subj", "pred", "obj", "url", "sent_id", "confidence"]
@@ -155,11 +173,14 @@ def test_turbo_triples_equal_staged_composition(spark, tmp_path):
         ckpt = run_pipeline(
             spark, pages, aliases, evecs, checkpoint_root=str(tmp_path / f"n{noise}")
         )["triples"]
+        lazy = run_pipeline(spark, pages, aliases, evecs)["triples"]
         a = set(map(tuple, staged.select(cols).collect()))
         b = set(map(tuple, turbo.select(cols).collect()))
         c = set(map(tuple, ckpt.select(cols).collect()))
+        d = set(map(tuple, lazy.select(cols).collect()))
         assert a == b, f"noise={noise}: {len(a)} staged vs {len(b)} turbo"
         assert a == c, f"noise={noise}: {len(a)} staged vs {len(c)} checkpointed"
+        assert b == d, f"noise={noise}: {len(b)} turbo vs {len(d)} lazy"
 
 
 def test_null_html_row_changes_no_triples(spark, clean_pages):
