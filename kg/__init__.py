@@ -12,7 +12,7 @@ distributed KG builder over Common-Crawl-style web pages:
          subword->word alignment, BIO decode)
       -> K3 alias candidate gen (broadcast hash join)
       -> K4 embedding cosine re-rank (numpy alias verdict, broadcast join)
-      -> K5 co-sentence pair gen (self-join)
+      -> K5 co-sentence pair gen (span pairs within a sentence, no self-join)
       -> K6 relation extraction
       -> K7 canonicalization (same-as union-find in the dictionary compile)
       -> K8 partitioned (subj, pred, obj) triples

@@ -273,7 +273,7 @@ def _extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_text_auto)
 
 
-def html_to_text(pages: DataFrame, text_col: str = "text") -> DataFrame:
+def html_to_text(pages: DataFrame) -> DataFrame:
     """K1 operator: pages(url, warc_ts, html, lang, ...) -> text_extracted.
 
     Drops ``html`` immediately after extraction so the (large) binary
@@ -281,5 +281,5 @@ def html_to_text(pages: DataFrame, text_col: str = "text") -> DataFrame:
     column-pruning barriers, so the projection is explicit
     (SURVEY.md §4 "Arrow UDFs are pruning barriers").
     """
-    keep = [c for c in pages.columns if c not in ("html", text_col)]
-    return pages.select(*keep, _extract_text_udf(F.col("html")).alias(text_col))
+    keep = [c for c in pages.columns if c not in ("html", "text")]
+    return pages.select(*keep, _extract_text_udf(F.col("html")).alias("text"))

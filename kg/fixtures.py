@@ -298,12 +298,11 @@ def entity_vecs_df(spark: SparkSession) -> DataFrame:
     """K4 side input: entity_vecs(entity_id, embedding float[64]).
 
     Built FROM A PANDAS FRAME, not a row list: the pandas+Arrow
-    createDataFrame path plans a true LocalTableScan (rows live in the
-    JVM), so every downstream action/broadcast build over the
-    dictionary is job-free — the row-list path plans an ExistingRDD
-    whose every consumer launches a Python-worker deserialization job
-    (measured 0.33 s vs 0.05 s per toPandas at 65 rows; same values,
-    asserted in tests). aliases_df above already took this path."""
+    createDataFrame path plans a LocalTableScan (rows live in the
+    JVM), while the row-list path plans an ExistingRDD whose every
+    consumer launches a Python-worker deserialization job (measured
+    0.33 s vs 0.05 s per toPandas at 65 rows; same values, asserted
+    in tests). aliases_df above already took this path."""
     rows = [
         {
             "entity_id": e["entity_id"],

@@ -18,19 +18,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-FIXTURE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def table_format() -> str:
     return os.environ.get("KG_TABLE_FORMAT", "parquet")
@@ -123,6 +110,3 @@ def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver-generated fixture table (TESTDATA.md)."""
     return read_table(spark, f"{sf_dir}/{name}.parquet")
 
-
-def load_all_fixtures(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_fixture(spark, sf_dir, t) for t in FIXTURE_TABLES}

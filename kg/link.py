@@ -96,8 +96,8 @@ def alias_verdicts_local(
 
     Returns ``(entity_id long, alias string, prior double, cosine
     double, rank int)``, dictionary-sized, built from a pandas frame so
-    it plans a LocalTableScan: every downstream broadcast build is
-    job-free.
+    it plans a LocalTableScan (not an ExistingRDD backed by a Python
+    RDD).
 
     Computed on the driver in one numpy pass. The cosine is the same
     arithmetic as ``cosine_expr`` (gated bit for bit against

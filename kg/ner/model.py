@@ -35,13 +35,6 @@ from pyspark.sql.types import (
 
 from kg.ner import vocab as V
 
-_ENCODE_SCHEMA = StructType(
-    [
-        StructField("pieces", ArrayType(StringType())),
-        StructField("word_idx", ArrayType(IntegerType())),
-    ]
-)
-
 MICRO_BATCH = 128
 
 
@@ -199,25 +192,6 @@ class _Model:
 # ---------------------------------------------------------- Spark ops
 
 
-@pandas_udf(_ENCODE_SCHEMA)
-def _encode_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    model = _Model.get()
-    for words_col in it:
-        recs = [model.encode(list(w)) for w in words_col]
-        yield pd.DataFrame(
-            {"pieces": [r[0] for r in recs], "word_idx": [r[1] for r in recs]}
-        )
-
-
-def subword_tokenize(df: DataFrame, words_col: str = "words") -> DataFrame:
-    """M4 as a visible operator: + pieces, word_idx columns."""
-    enc = _encode_udf(F.col(words_col))
-    return df.withColumn("_enc", enc).select(
-        "*", F.col("_enc.pieces").alias("pieces"),
-        F.col("_enc.word_idx").alias("word_idx"),
-    ).drop("_enc")
-
-
 @pandas_udf(ArrayType(StringType()))
 def _tag_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
     model = _Model.get()  # once per worker, reused across batches
@@ -226,9 +200,10 @@ def _tag_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield pd.Series(tags)
 
 
-def tag_sentences(df: DataFrame, words_col: str = "words") -> DataFrame:
-    """M4+M5+M6 fused batched inference: + tags: array<string>."""
-    return df.withColumn("tags", _tag_udf(F.col(words_col)))
+def tag_sentences(df: DataFrame) -> DataFrame:
+    """M4+M5+M6 fused batched inference over ``words``: + tags:
+    array<string>."""
+    return df.withColumn("tags", _tag_udf(F.col("words")))
 
 
 # parallel primitive arrays instead of array<struct>: Arrow converts
@@ -246,7 +221,7 @@ _SPANS_SCHEMA = StructType(
 @pandas_udf(_SPANS_SCHEMA)
 def _detect_spans_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     """M4..M7 in ONE JVM<->Python crossing: tokenize+forward+align+BIO
-    decode inside the same Arrow batch (the pipeline hot path; the
+    decode inside the same Arrow batch (the staged K2 stage; the
     separate tag/decode UDFs remain for per-op tests and queries)."""
     from kg.ner.bio import decode_bio
 
@@ -263,21 +238,18 @@ def _detect_spans_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         )
 
 
-def detect_mentions(
-    df: DataFrame, words_col: str = "words", carry_words: bool = False
-) -> DataFrame:
+def detect_mentions(df: DataFrame) -> DataFrame:
     """sentences(url, sent_id, words) -> mentions table, one fused
     Arrow stage + Catalyst explode/slice for surfaces.
 
-    ``carry_words=True`` keeps the sentence token array on each
-    mention row: K6's between-text then needs NO join back to the
-    sentences table (saves a full shuffle+sort of the corpus-sized
-    sentence relation at the cost of duplicating token arrays across
-    a sentence's mentions)."""
-    spans = df.withColumn("_spans", _detect_spans_udf(F.col(words_col))).select(
+    Each mention row keeps its sentence's ``words``: K6's between-text
+    then needs NO join back to the sentences table (saves a full
+    shuffle+sort of the corpus-sized sentence relation at the cost of
+    duplicating token arrays across a sentence's mentions)."""
+    spans = df.withColumn("_spans", _detect_spans_udf(F.col("words"))).select(
         "url",
         "sent_id",
-        F.col(words_col).alias("_words"),
+        "words",
         F.explode(
             F.arrays_zip(
                 F.col("_spans.ent_types").alias("ent_type"),
@@ -286,9 +258,9 @@ def detect_mentions(
             )
         ).alias("span"),
     )
-    cols = [
-        F.col("url"),
-        F.col("sent_id"),
+    return spans.select(
+        "url",
+        "sent_id",
         F.xxhash64("url", "sent_id", F.col("span.begin")).alias("mention_id"),
         F.col("span.ent_type").alias("ent_type"),
         F.col("span.begin").alias("begin"),
@@ -296,13 +268,11 @@ def detect_mentions(
         F.concat_ws(
             " ",
             F.slice(
-                F.col("_words"),
+                F.col("words"),
                 F.col("span.begin") + 1,
                 F.col("span.end") - F.col("span.begin"),
             ),
         ).alias("surface"),
         F.lit(1.0).alias("score"),
-    ]
-    if carry_words:
-        cols.append(F.col("_words").alias("words"))
-    return spans.select(*cols)
+        "words",
+    )

@@ -17,18 +17,18 @@ SENTENCE_BOUNDARY = r"(?<=[.!?])\s+|\n+"
 WORD_BOUNDARY = r"\s+"
 
 
-def split_sentences(df: DataFrame, text_col: str = "text") -> DataFrame:
+def split_sentences(df: DataFrame) -> DataFrame:
     """text_extracted(url, ..., text) -> sentences(url, sent_id, sentence).
 
     posexplode keeps the in-document sentence order as sent_id without
     any window/shuffle — the split happens in the scan stage.
     """
-    keep = [c for c in df.columns if c != text_col]
+    keep = [c for c in df.columns if c != "text"]
     return (
         df.select(
             *keep,
             F.posexplode(
-                F.split(F.col(text_col), SENTENCE_BOUNDARY)
+                F.split(F.col("text"), SENTENCE_BOUNDARY)
             ).alias("sent_id", "sentence"),
         )
         .withColumn("sentence", F.trim(F.col("sentence")))
@@ -36,6 +36,6 @@ def split_sentences(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def tokenize_words(df: DataFrame, sentence_col: str = "sentence") -> DataFrame:
+def tokenize_words(df: DataFrame) -> DataFrame:
     """sentences -> + words: array<string> (M3, whitespace tokenize)."""
-    return df.withColumn("words", F.split(F.trim(F.col(sentence_col)), WORD_BOUNDARY))
+    return df.withColumn("words", F.split(F.trim(F.col("sentence")), WORD_BOUNDARY))

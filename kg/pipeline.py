@@ -54,61 +54,41 @@ from kg.extract import html_to_text
 from kg.graph import connected_components, same_as_edges
 from kg.link import alias_verdicts_local, compile_dictionary
 from kg.ner.tokenize import split_sentences, tokenize_words
-from kg.relations import extract_relations, pair_gen
+from kg.relations import extract_relations, pair_gen_grouped
 
 # ----------------------------------------------------------- X1 salting
 
 
 def salt_repartition(
-    df: DataFrame,
-    key_col: str,
-    buckets: int = 16,
-    num_partitions: int | None = None,
-    salt_from: str = "url",
+    df: DataFrame, key_col: str, buckets: int, num_partitions: int
 ) -> DataFrame:
     """X1: deterministic salted repartition for skewed hot keys
     (BASELINE.json:6 "salted repartitioning for skewed hot domains").
 
-    Salt = xxhash64 of a ROW-UNIQUE column (``salt_from``, default
-    url) — hashing the skewed key itself would map the whole hot key
-    to one salt. Not rand(): reruns must place rows identically for
-    checkpoint/resume determinism. A hot host holding 30% of urls
-    spreads over ``buckets`` partitions instead of melting one
-    executor during the UDF-heavy NER stages.
+    Salt = xxhash64 of the ROW-UNIQUE ``url`` column — hashing the
+    skewed key itself would map the whole hot key to one salt. Not
+    rand(): reruns must place rows identically for checkpoint/resume
+    determinism. A hot host holding 30% of urls spreads over
+    ``buckets`` partitions instead of melting one executor during the
+    UDF-heavy NER stages.
     """
     salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(salt_from)), F.lit(buckets))
+        "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(buckets))
     )
-    if num_partitions:
-        out = salted.repartition(num_partitions, F.col(key_col), F.col("_salt"))
-    else:
-        out = salted.repartition(F.col(key_col), F.col("_salt"))
-    return out.drop("_salt")
-
-
-def host_of(url_col: str = "url"):
-    return F.regexp_extract(F.col(url_col), r"^https?://([^/]+)/", 1)
+    return salted.repartition(
+        num_partitions, F.col(key_col), F.col("_salt")
+    ).drop("_salt")
 
 
 # --------------------------------------------------------- stage bodies
 
 
-def stage_extract(pages: DataFrame, salt_hot_hosts: bool = False) -> DataFrame:
-    """K1 (+optional X1): Arrow-UDF extraction.
+def stage_extract(pages: DataFrame) -> DataFrame:
+    """K1: Arrow-UDF extraction.
 
     Projection before the UDF is explicit: only (url, warc_ts, lang,
-    html) enter; `html` is dropped on the other side.
-
-    ``salt_hot_hosts``: file-source splits are size-balanced, so the
-    UDF is naturally even and the default skips the (corpus-sized)
-    salting shuffle. Turn it on when the source is clustered by host
-    (e.g. an Iceberg table written in crawl order), where one split
-    would otherwise hold a hot domain end to end."""
-    pages = pages.select("url", "warc_ts", "lang", "html")
-    if salt_hot_hosts:
-        pages = pages.withColumn("_host", host_of())
-        pages = salt_repartition(pages, "_host", buckets=64).drop("_host")
-    return html_to_text(pages)
+    html) enter; `html` is dropped on the other side."""
+    return html_to_text(pages.select("url", "warc_ts", "lang", "html"))
 
 
 def stage_sentences(text_extracted: DataFrame) -> DataFrame:
@@ -122,9 +102,7 @@ def stage_mentions(sentences: DataFrame) -> DataFrame:
     so K6 needs no join back to the sentences table."""
     from kg.ner.model import detect_mentions
 
-    return detect_mentions(
-        sentences.select("url", "sent_id", "words"), carry_words=True
-    )
+    return detect_mentions(sentences.select("url", "sent_id", "words"))
 
 
 def stage_linked(
@@ -147,14 +125,11 @@ def stage_linked(
 def stage_triples_raw(
     linked: DataFrame, sentences: DataFrame | None = None
 ) -> DataFrame:
-    """K5 pair gen + K6 relation rules. Hot path: grouped single-
-    shuffle pair generation when mentions carry their tokens; falls
-    back to the generic self-join + sentence join otherwise."""
-    from kg.relations import pair_gen_grouped
-
-    if "words" in linked.columns:
-        return extract_relations(pair_gen_grouped(linked))
-    return extract_relations(pair_gen(linked), sentences)
+    """K5 pair gen + K6 relation rules: grouped single-shuffle pair
+    generation over mentions that carry their sentence tokens.
+    ``sentences`` is ignored (the tokens come with the mentions); it
+    stays so callers that still pass the sentences table keep working."""
+    return extract_relations(pair_gen_grouped(linked))
 
 
 def stage_components(aliases: DataFrame, registry_ids: DataFrame | None = None) -> DataFrame:

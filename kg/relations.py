@@ -1,16 +1,18 @@
 """K5 co-sentence pair generation + K6 relation extraction.
 
-K5 (BASELINE.json:6 "co-sentence entity pairs"): self-join of linked
-mentions on (url, sent_id) with a textual-order residual
-(m1.begin < m2.begin) — an equi-join with an inequality filter, NOT a
-cross join; the shuffle key is the sentence, so pair blowup stays
-bounded by per-sentence mention counts.
+K5 (BASELINE.json:6 "co-sentence entity pairs"): ``pair_gen_grouped``
+groups the linked mentions by sentence (url, sent_id) in ONE shuffle
+and explodes each group's ordered pairs (subject textual-first) in
+memory, bounded by ``MAX_RULE_WORDS``. ``pair_gen`` is the same pair
+set as a self-join on (url, sent_id) with a textual-order residual,
+kept as the reference the grouped generator is tested against.
 
-K6: deterministic predicate rules over the between-mention text.
-Entirely Catalyst (slice + concat_ws + CASE) — zero Python. The rule
-table mirrors the fixture generator's templates, which stand in for
-the reference's relation semantics (SURVEY.md §5: frozen oracles
-define reference behavior; empty mount)."""
+K6: deterministic predicate rules over the between-mention text,
+sliced from the sentence tokens the mentions carry. Entirely Catalyst
+(slice + concat_ws + CASE) — zero Python. The rule table mirrors the
+fixture generator's templates, which stand in for the reference's
+relation semantics (SURVEY.md §5: frozen oracles define reference
+behavior; empty mount)."""
 
 from __future__ import annotations
 
@@ -36,25 +38,20 @@ MAX_RULE_WORDS = max(len(t.split(" ")) for t, _, _ in RELATION_RULES)
 
 
 def pair_gen(linked: DataFrame) -> DataFrame:
-    """K5: ordered co-sentence mention pairs (subject textual-first).
+    """K5 reference: ordered co-sentence mention pairs (subject
+    textual-first) as a self-join, the oracle for ``pair_gen_grouped``.
 
     Shuffle-hash hinted: sentence keys are high-cardinality and the
-    per-key groups are tiny, so hashing beats the sort-merge default.
-    If the linked mentions carry ``words`` (see detect_mentions
-    carry_words), the subject side keeps them so K6 needs no further
-    join."""
-    subj_cols = [
-        F.col("url"),
-        F.col("sent_id"),
+    per-key groups are tiny, so hashing beats the sort-merge default."""
+    m1 = linked.select(
+        "url",
+        "sent_id",
         F.col("mention_id").alias("subj_mention"),
         F.col("entity_id").alias("subj_entity"),
         F.col("ent_type").alias("subj_type"),
         F.col("begin").alias("subj_begin"),
         F.col("end").alias("subj_end"),
-    ]
-    if "words" in linked.columns:
-        subj_cols.append(F.col("words"))
-    m1 = linked.select(*subj_cols)
+    )
     m2 = linked.select(
         "url",
         "sent_id",
@@ -71,7 +68,7 @@ def pair_gen(linked: DataFrame) -> DataFrame:
 
 
 def pair_gen_grouped(linked: DataFrame) -> DataFrame:
-    """K5 hot path: co-sentence pairs via ONE shuffle.
+    """K5: co-sentence pairs via ONE shuffle.
 
     groupBy (url, sent_id) + in-memory pair explosion instead of the
     self-join: per-sentence mention counts are tiny, and the
@@ -79,8 +76,9 @@ def pair_gen_grouped(linked: DataFrame) -> DataFrame:
     explode, so a long sentence yields O(k) rows, not O(k^2). One
     exchange of the linked table replaces two exchanges + a join —
     and, crucially for a lazy single-action pipeline, the upstream
-    NER DAG executes ONCE instead of once per join side. Requires
-    carry_words mentions (kg.ner.model)."""
+    NER DAG executes ONCE instead of once per join side. The linked
+    mentions carry their sentence's ``words`` (kg.ner.model
+    ``detect_mentions``); each pair keeps them for K6."""
     ms = F.collect_list(
         F.struct("mention_id", "entity_id", "ent_type", "begin", "end")
     ).alias("ms")
@@ -119,26 +117,11 @@ def pair_gen_grouped(linked: DataFrame) -> DataFrame:
     )
 
 
-def extract_relations(
-    pairs: DataFrame,
-    sentences: DataFrame | None = None,
-    threshold: float = CONFIDENCE_THRESHOLD,
-) -> DataFrame:
-    """K6: pairs + sentence words -> triples_raw.
+def extract_relations(pairs: DataFrame) -> DataFrame:
+    """K6: pairs carrying their sentence ``words`` -> triples_raw.
 
     between-text = words strictly between the two spans; predicate via
-    the rule table (whole-stage-codegen CASE expression). If the pairs
-    already carry ``words`` (carry_words path), no sentence join runs."""
-    if "words" in pairs.columns:
-        with_words = pairs
-    else:
-        if sentences is None:
-            raise ValueError("pairs lack words; pass the sentences table")
-        with_words = pairs.join(
-            sentences.select("url", "sent_id", "words").hint("shuffle_hash"),
-            ["url", "sent_id"],
-            "inner",
-        )
+    the rule table (whole-stage-codegen CASE expression)."""
     between = F.lower(
         F.concat_ws(
             " ",
@@ -157,10 +140,10 @@ def extract_relations(
         pred_expr = F.when(between == text, F.lit(pred)).otherwise(pred_expr)
         conf_expr = F.when(between == text, F.lit(conf)).otherwise(conf_expr)
     return (
-        with_words.withColumn("pred", pred_expr)
+        pairs.withColumn("pred", pred_expr)
         .withColumn("confidence", conf_expr)
         .filter(F.col("pred").isNotNull())
-        .filter(F.col("confidence") >= threshold)
+        .filter(F.col("confidence") >= CONFIDENCE_THRESHOLD)
         .select(
             "subj_entity",
             "pred",

@@ -227,13 +227,12 @@ def main() -> int:
         and "BroadcastHashJoin" in plink
         and "LocalTableScan" in plink,
     )
-    traw = P.stage_triples_raw(linked, sents_m)
-    # K5 self-joins linked, so linked's subtree prints twice in the
-    # tree; with a Python-free link stage this bound is 0: the relation
-    # rules add no Python.
+    traw = P.stage_triples_raw(linked)
+    # K5 groups linked by sentence in one shuffle, so linked's subtree
+    # prints once: the pair explode and the relation rules add no Python.
     check(
         "relation stage adds no Python (Catalyst CASE rules)",
-        arrow_count(traw) <= 2 * arrow_count(linked),
+        arrow_count(traw) == arrow_count(linked),
     )
 
     # --- r5 additions -----------------------------------------------------

@@ -149,8 +149,7 @@ def _staged_triples(pages, aliases, evecs, comps):
 
     sents = stage_sentences(stage_extract(pages))
     return stage_triples(
-        stage_triples_raw(stage_linked(stage_mentions(sents), aliases, evecs), sents),
-        comps,
+        stage_triples_raw(stage_linked(stage_mentions(sents), aliases, evecs)), comps
     )
 
 
