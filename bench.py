@@ -97,51 +97,23 @@ def _bench_pages(spark, n_pages: int) -> str:
     return path
 
 
-_DICT_CACHE: dict[str, tuple] = {}
-
-
-def _dictionary_inputs(spark):
-    """Aliases, entity vecs, and the K7 component map, built once per
-    process. All three are functions of the entity DICTIONARY only
-    (corpus-independent): a production deployment builds them once
-    per dictionary update and reuses them across every corpus batch,
-    so they are index-build cost, not corpus throughput — excluded
-    from the timed section like the input fixture itself
-    (BASELINE.md §6 protocol). ``stage_components`` returns the
-    components map already collected to the driver (a KB-sized row
-    list), so no per-run job re-derives it."""
-    from kg import fixtures as FX
-    from kg.pipeline import stage_components
-
-    # applicationId, not id(spark): CPython reuses ids after GC, so a
-    # rebuilt session could be served DataFrames bound to a stopped one
-    key = spark.sparkContext.applicationId
-    if key not in _DICT_CACHE:
-        # one-entry cache (r4 advice): a different applicationId means
-        # the old session is gone — drop its dead DataFrame references
-        # instead of accumulating them across session rebuilds
-        _DICT_CACHE.clear()
-        aliases = FX.aliases_df(spark)
-        evecs = FX.entity_vecs_df(spark)
-        _DICT_CACHE[key] = (aliases, evecs, stage_components(aliases))
-    return _DICT_CACHE[key]
-
-
 def _run_kg_pipeline(spark, n_pages: int) -> tuple[float, int]:
     """Flagship KG pipeline over the pre-generated bench pages
     (~50k, FIXTURES.md §2). Returns (seconds, n_pages)."""
+    from kg import fixtures as FX
     from kg.pipeline import run_pipeline
-
     from kg.session import PIPELINE_SCAN_CONF, scoped_conf
 
     pages = spark.read.parquet(_bench_pages(spark, n_pages))
-    aliases, evecs, comps = _dictionary_inputs(spark)
+    # dictionary inputs depend on the entity dictionary only, not the
+    # corpus: built before the clock starts, like the input pages
+    aliases, evecs = FX.aliases_df(spark), FX.entity_vecs_df(spark)
     t0 = time.monotonic()
     # 16m input splits for the UDF-heavy pipeline only (split planning
     # happens at action time, so the write must sit inside the scope);
     # relational queries keep the 128m session default
     with scoped_conf(spark, PIPELINE_SCAN_CONF):
-        res = run_pipeline(spark, pages, aliases, evecs, components=comps)
+        res = run_pipeline(spark, pages, aliases, evecs)
         res["triples"].write.format("noop").mode("overwrite").save()
     return time.monotonic() - t0, n_pages
 

@@ -483,17 +483,16 @@ def dedup_clusters(
     dictionary-of-clusters-sized join against kg.textstats scores.)
 
     Scale shape: the pair edges are near-dup-sized (candidate-pruned,
-    never the pair space); components run with ``corpus_scale=True``
-    — the edge set derives from corpus-sized data, so the driver
-    union-find shortcut is hard-disabled and the O(log n) distributed
-    loop (pointer jumping) is what a small run validates."""
+    never the pair space); the edge set derives from corpus-sized
+    data, so components run on the O(log n) distributed loop (pointer
+    jumping), never a driver collect."""
     from kg.graph import connected_components
 
     pairs = minhash_lsh_pairs(docs, n, k, bands, threshold, seed, neutral=neutral)
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
-    comps = connected_components(edges, corpus_scale=True)
+    comps = connected_components(edges)
     sizes = comps.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )

@@ -17,6 +17,11 @@ Same-as edge derivation: entities sharing a *high-prior* alias
 (prior >= 0.5: full surfaces and distinctive org stems; ambiguous
 person-first-name aliases sit below the bar) — the deterministic
 stand-in for the reference's same-as rules.
+
+The same-as graph is dictionary-sized, so K7 labels it with a driver
+union-find (``same_as_components``, ``_union_find_components``);
+``connected_components`` is the distributed loop, for corpus-derived
+graphs (dedup clusters) and the ``graph_components`` query.
 """
 
 from __future__ import annotations
@@ -27,11 +32,6 @@ from pyspark.sql import functions as F
 
 SAME_AS_PRIOR = 0.5
 MAX_ITERATIONS = 50
-# below this edge count the graph is collected and solved with
-# union-find on the driver (KB-sized same-as graphs are tiny even at
-# a 10^12-page corpus — entity count is corpus-independent); the
-# distributed loop handles anything larger
-SMALL_GRAPH_EDGES = 100_000
 
 
 def same_as_edges(aliases: DataFrame) -> DataFrame:
@@ -85,38 +85,20 @@ def same_as_components(alias_pdf: pd.DataFrame) -> pd.DataFrame:
 def _union_find_components(
     edges: DataFrame, vertices: DataFrame | None
 ) -> DataFrame:
-    """Driver-side union-find for small graphs (same min-id labels as
-    the distributed loop; one collect, one parallelize)."""
+    """Driver-side union-find over a dictionary-sized edge set (same
+    min-id labels as the distributed loop; one collect, one
+    parallelize)."""
     ids = [] if vertices is None else [r["id"] for r in vertices.collect()]
     rows = _union_find(((r["src"], r["dst"]) for r in edges.collect()), ids)
     return edges.sparkSession.createDataFrame(rows, "id long, component long")
 
 
-def connected_components(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    small_graph_edges: int = SMALL_GRAPH_EDGES,
-    corpus_scale: bool = False,
-) -> DataFrame:
-    """edges(src, dst) [+ vertices(id)] -> components(id, component).
+def connected_components(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
+    """edges(src, dst) [+ vertices(id)] -> components(id, component),
+    by the distributed min-label + pointer-jump loop.
 
     component = min vertex id in the component (deterministic, so
-    resumed runs and the gold fixture agree on ids). Small graphs
-    short-circuit to driver union-find (set ``small_graph_edges=0``
-    to force the distributed loop, as the tests do).
-
-    ``corpus_scale=True`` hard-disables the driver shortcut: pass it
-    whenever the edge set is derived from corpus-sized data (e.g.
-    document co-occurrence graphs), so a small sample run can never
-    silently validate a driver-collect plan that would melt at 100 TB.
-    The KG pipeline's same-as graph is dictionary-derived (entity
-    registry, corpus-independent), so it keeps the shortcut.
-    """
-    spark = edges.sparkSession
-    if corpus_scale:
-        small_graph_edges = 0
-    if small_graph_edges and edges.limit(small_graph_edges + 1).count() <= small_graph_edges:
-        return _union_find_components(edges, vertices)
+    resumed runs and the gold fixture agree on ids)."""
     sym = edges.select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     ).unionAll(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
@@ -193,7 +175,7 @@ def pagerank(
     N is the VERTEX count (isolated vertices hold (1-d)/N)."""
     spark = edges.sparkSession
     verts = vertices.select("id").distinct()
-    n = verts.count()  # vertex-sized driver scalar, like K7's shortcut
+    n = verts.count()  # vertex-sized driver scalar
     outdeg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("outdeg")
     )
@@ -299,13 +281,11 @@ def _customer_chain_edges(customers: DataFrame) -> DataFrame:
 def graph_components_query(spark, sf_dir: str) -> DataFrame:
     """Driver entry with an EXACT DuckDB oracle (recursive-CTE
     transitive closure): connected components over the customer chain
-    graph, distributed loop forced (small_graph_edges=0) so the driver
-    scores the min-label + pointer-jump path itself, not the
-    union-find shortcut."""
+    graph, so the driver scores the min-label + pointer-jump loop."""
     customers = spark.read.parquet(f"{sf_dir}/customer.parquet")
     edges = _customer_chain_edges(customers)
     verts = customers.select(F.col("c_custkey").alias("id"))
-    comp = connected_components(edges, vertices=verts, small_graph_edges=0)
+    comp = connected_components(edges, vertices=verts)
     return comp.select(F.col("id").alias("c_custkey"), "component")
 
 

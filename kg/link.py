@@ -112,22 +112,16 @@ def alias_verdicts_local(
     )
 
 
-def compile_dictionary(
-    aliases: DataFrame, entity_vecs: DataFrame, components: DataFrame | None = None
-) -> DataFrame:
+def compile_dictionary(aliases: DataFrame, entity_vecs: DataFrame) -> DataFrame:
     """The alias dictionary compiled for linking, in one driver pass:
     ``(alias string, entity_id long, component long)``, one row per
     alias: its top-1 entity (the ``alias_verdicts_local`` verdict) and
-    that entity's same-as component (``same_as_components``, or the
-    prebuilt ``components`` map ``(id, component)``; an entity outside
-    every component is its own). Built from a pandas frame, so it plans
-    a LocalTableScan: its rows travel in the plan."""
+    that entity's same-as component (``same_as_components``; an entity
+    outside every component is its own). Built from a pandas frame, so
+    it plans a LocalTableScan: its rows travel in the plan."""
     alias_pdf = aliases.select("alias", "entity_id", "prior").toPandas()
     verdict = _verdicts(alias_pdf, entity_vecs, k=1)
-    if components is None:
-        comps = same_as_components(alias_pdf)
-    else:
-        comps = components.select("id", "component").toPandas()
+    comps = same_as_components(alias_pdf)
     label = dict(zip(comps["id"].tolist(), comps["component"].tolist()))
     out = verdict[["alias", "entity_id"]].assign(
         component=[label.get(e, e) for e in verdict["entity_id"].tolist()]

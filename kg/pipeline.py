@@ -51,7 +51,7 @@ from pyspark.sql.types import (
 
 from kg import io
 from kg.extract import html_to_text
-from kg.graph import connected_components, same_as_edges
+from kg.graph import _union_find_components, same_as_edges
 from kg.link import alias_verdicts_local, compile_dictionary
 from kg.ner.tokenize import split_sentences, tokenize_words
 from kg.relations import extract_relations, pair_gen_grouped
@@ -133,8 +133,9 @@ def stage_triples_raw(
 
 
 def stage_components(aliases: DataFrame, registry_ids: DataFrame | None = None) -> DataFrame:
-    """K7: same-as edges -> connected components."""
-    return connected_components(same_as_edges(aliases), vertices=registry_ids)
+    """K7: same-as edges -> connected components, labeled by a driver
+    union-find (the same-as graph is dictionary-sized)."""
+    return _union_find_components(same_as_edges(aliases), registry_ids)
 
 
 _TRIPLE_KEY = ["subj", "pred", "obj", "url", "sent_id"]
@@ -486,10 +487,10 @@ def run_pipeline(
     stored matched pairs without re-running the crossing. Returns the
     three DataFrames (plus ``_orchestrator`` when checkpointing).
 
-    ``components``: a prebuilt K7 map ``(id, component)``
-    (``stage_components``). It depends on the dictionary only, so a
-    deployment builds it once per dictionary update and reuses it for
-    every corpus batch; None derives it in the dictionary compile."""
+    ``components`` is ignored: the dictionary compile always derives
+    the same-as components itself, in the same driver pass as the
+    verdict. It stays so callers that still pass a prebuilt ``(id,
+    component)`` map keep working."""
     orch = Orchestrator(spark, checkpoint_root) if checkpoint_root else None
 
     def stage(name, fn, partition_by=None):
@@ -497,7 +498,7 @@ def run_pipeline(
 
     matched = stage("matched_pairs", lambda: matched_pairs(pages))
     dictionary = stage(
-        "components", lambda: compile_dictionary(aliases, entity_vecs, components)
+        "components", lambda: compile_dictionary(aliases, entity_vecs)
     )
     if "alias" not in dictionary.columns:
         raise ValueError(

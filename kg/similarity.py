@@ -253,7 +253,7 @@ def ivf_assign(
     pass + one n_cells-group shuffle at INDEX-BUILD time (stride/hash
     seeds alone under-cover clustered data). The centroid table is
     dictionary-sized, so collecting it between sweeps is the same
-    bounded-driver-work class as the union-find shortcut.
+    bounded-driver-work class as K7's same-as union-find.
 
     Determinism: refined centroids come from EXACT integer summation
     (see the sweep body), so the whole index — centroids and every

@@ -152,12 +152,11 @@ def main() -> int:
     # audit each stage's plan from a materialized input (the orchestrated
     # execution shape); tree-string counting on the fused lazy plan would
     # overcount shared subtrees.
-    import tempfile
-
     from kg import fixtures as FX
     from kg import pipeline as P
+    from kg.io import scratch_dir
 
-    pages_path = tempfile.mkdtemp(prefix="audit_pages_") + "/pages"
+    pages_path = scratch_dir("audit_pages_") + "/pages"
     FX.gen_pages(spark, 50, seed=42).write.parquet(pages_path)
     pages = spark.read.parquet(pages_path)
 
@@ -211,12 +210,12 @@ def main() -> int:
         arrow_count(sents) == 1,  # still just the upstream extract UDF
     )
     # from materialized sentences: fused NER = 1 boundary
-    sents_path = tempfile.mkdtemp(prefix="audit_sents_") + "/s"
+    sents_path = scratch_dir("audit_sents_") + "/s"
     sents.write.parquet(sents_path)
     sents_m = spark.read.parquet(sents_path)
     mentions = P.stage_mentions(sents_m)
     check("NER stage: exactly 1 Arrow boundary (fused M4-M7)", arrow_count(mentions) == 1)
-    m_path = tempfile.mkdtemp(prefix="audit_m_") + "/m"
+    m_path = scratch_dir("audit_m_") + "/m"
     mentions.write.parquet(m_path)
     m_m = spark.read.parquet(m_path)
     linked = P.stage_linked(m_m, FX.aliases_df(spark), FX.entity_vecs_df(spark))

@@ -84,8 +84,8 @@ def test_dedup_clusters_planted_groups(spark):
     """dedup_clusters groups each planted near-dup with its base doc,
     with the min doc_id elected canonical; the exact dup (doc 2000 of
     doc 0) lands in doc 0's cluster, making it the one 3-doc cluster.
-    The pair graph is corpus-derived, so corpus_scale forces the
-    distributed components loop — this gates that path end-to-end."""
+    The pair graph is corpus-derived, so it runs the distributed
+    components loop — this gates that path end-to-end."""
     from kg.dedup import dedup_clusters
 
     docs = _planted_docs(spark)

@@ -27,32 +27,29 @@ def uf_components(edges, vertices):
     return comp
 
 
-def _run(spark, edges, small=0):
-    # small=0 forces the distributed iterative loop (the path that
-    # matters at scale); small>0 exercises the union-find shortcut
+def _run(spark, edges):
     df = spark.createDataFrame(edges, "src long, dst long")
-    return {
-        r["id"]: r["component"]
-        for r in connected_components(df, small_graph_edges=small).collect()
-    }
+    return {r["id"]: r["component"] for r in connected_components(df).collect()}
 
 
 def test_small_graph_shortcut_matches_distributed(spark):
     """The driver union-finds label the same edges as the distributed
-    loop: connected_components' small-graph shortcut, and the one the
-    dictionary compile uses (same_as_components), where each edge
-    becomes an alias shared by its two ends."""
+    loop: the one behind stage_components (the kg_components query),
+    and the one the dictionary compile uses (same_as_components).
+    Each edge becomes an alias shared by its two ends."""
     import pandas as pd
 
     from kg.graph import SAME_AS_PRIOR, same_as_components
+    from kg.pipeline import stage_components
 
     edges = [(1, 2), (2, 3), (10, 11), (5, 3), (7, 6), (12, 11), (20, 21)]
-    want = _run(spark, edges, small=0)
-    assert _run(spark, edges, small=10**5) == want
+    want = _run(spark, edges)
     alias_pdf = pd.DataFrame(
         [(f"e{a}_{b}", v, SAME_AS_PRIOR) for a, b in edges for v in (a, b)],
         columns=["alias", "entity_id", "prior"],
     )
+    aliases = spark.createDataFrame(alias_pdf, "alias string, entity_id long, prior double")
+    assert {r["id"]: r["component"] for r in stage_components(aliases).collect()} == want
     got = same_as_components(alias_pdf)
     assert dict(zip(got["id"], got["component"])) == want
 

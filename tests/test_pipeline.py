@@ -172,7 +172,9 @@ def test_turbo_triples_equal_staged_composition(spark, tmp_path):
         ckpt = run_pipeline(
             spark, pages, aliases, evecs, checkpoint_root=str(tmp_path / f"n{noise}")
         )["triples"]
-        lazy = run_pipeline(spark, pages, aliases, evecs)["triples"]
+        # a passed component map is accepted and ignored (perfbench's
+        # kg_lazy call passes one)
+        lazy = run_pipeline(spark, pages, aliases, evecs, components=comps)["triples"]
         a = set(map(tuple, staged.select(cols).collect()))
         b = set(map(tuple, turbo.select(cols).collect()))
         c = set(map(tuple, ckpt.select(cols).collect()))
