@@ -120,28 +120,19 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kg import fixtures as FX
-    from kg.pipeline import stage_extract, stage_mentions, stage_sentences
+    from kg.pipeline import mentions
 
-    pages = FX.pages_from_documents(spark, sf_dir)
-    # words array<string> is internal pipeline state — dropped so the
-    # driver's canonicalizer sees scalar columns only
-    return stage_mentions(stage_sentences(stage_extract(pages))).drop("words")
+    return mentions(FX.pages_from_documents(spark, sf_dir))
 
 
 def _kg_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kg import fixtures as FX
-    from kg.pipeline import (
-        stage_extract,
-        stage_linked,
-        stage_mentions,
-        stage_sentences,
-    )
+    from kg.pipeline import mentions, stage_linked
 
     pages = FX.pages_from_documents(spark, sf_dir)
-    mentions = stage_mentions(stage_sentences(stage_extract(pages)))
     return stage_linked(
-        mentions, FX.aliases_df(spark), FX.entity_vecs_df(spark)
-    ).drop("words")
+        mentions(pages), FX.aliases_df(spark), FX.entity_vecs_df(spark)
+    )
 
 
 def _kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,7 +7,7 @@ from BASELINE.json's north_star) as the mention-detection stage of a
 distributed KG builder over Common-Crawl-style web pages:
 
     pages(url, warc_ts, html, text, lang)
-      -> K1 html_extract (Arrow UDF, byte-identical text per url)
+      -> K1 html_extract (in the one Arrow crossing, byte-identical text)
       -> M2..M7 NER core (subword tokenize, deterministic scorer,
          subword->word alignment, BIO decode)
       -> K3 alias candidate gen (broadcast hash join)

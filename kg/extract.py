@@ -18,11 +18,9 @@ text" is this frozen extraction spec, duplicated verbatim in
 Pure Python stdlib only (no lxml/bs4 in env), so the byte-identity is
 stable across pandas/pyarrow versions.
 
-The distributed operator is a vectorized Arrow UDF
-(``mapInPandas``-free scalar pandas_udf): binary html in, string text
-out, one Python<->JVM crossing, no per-row Python at the Spark level
-(the per-row loop lives inside the Arrow batch, which is the standard
-shape for opaque-binary kernels).
+The shipped crossing (``kg.pipeline``) calls ``extract_text_auto`` per
+page inside its Arrow batch. ``html_to_text`` is the same kernel as a
+scalar Arrow UDF, run only by the staged oracle.
 """
 
 from __future__ import annotations
@@ -275,6 +273,7 @@ def _extract_text_udf(html: pd.Series) -> pd.Series:
 
 def html_to_text(pages: DataFrame) -> DataFrame:
     """K1 operator: pages(url, warc_ts, html, lang, ...) -> text_extracted.
+    The staged oracle's K1 (``kg.pipeline.stage_extract``).
 
     Drops ``html`` immediately after extraction so the (large) binary
     column never crosses another stage boundary — Arrow UDFs are

@@ -105,8 +105,3 @@ def fs_delete(spark: SparkSession, path: str) -> None:
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     fs.delete(p, True)
 
-
-def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver-generated fixture table (TESTDATA.md)."""
-    return read_table(spark, f"{sf_dir}/{name}.parquet")
-

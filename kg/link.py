@@ -3,9 +3,9 @@
 K3 (BASELINE.json:6 "alias-dictionary candidate generation via
 broadcast hash join"): the alias dictionary is orders of magnitude
 smaller than the mentions table, so the join MUST be a broadcast hash
-join — no shuffle of the 10^12-row mention side. Enforced with an
-explicit ``F.broadcast`` hint (AQE would usually pick it, the hint
-makes it a guarantee).
+join — no shuffle of the 10^12-row mention side. ``kg.pipeline``'s
+link joins carry an explicit ``F.broadcast`` hint (AQE would usually
+pick it, the hint makes it a guarantee).
 
 K4 (BASELINE.json:6 "embedding cosine re-rank"): the mention encoder
 is a context-free hashed char-3-gram embedding of the lowercased
@@ -16,59 +16,19 @@ returns a local relation; ``compile_dictionary`` adds each verdict
 entity's same-as component (K7) in the same pass, so the shipped
 ``link_pairs`` resolves a surface in one broadcast join per side.
 
-``candidate_gen`` + ``rerank`` are the generic per-mention K3/K4
-operators (Arrow embedding UDF, Catalyst zip_with+aggregate cosine,
-window row_number with a (cosine desc, entity_id asc) tie-break).
-They are the independent reference the verdict is gated against in
-tests/test_link.py, bit for bit.
+The generic per-mention K3/K4 operators the verdict is gated
+against bit for bit (``candidate_gen`` + ``rerank``) live with the
+tests, in tests/reference.py.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, FloatType
+from pyspark.sql import DataFrame
 
 from kg.graph import same_as_components
 from kg.ner import vocab as V
-
-
-def candidate_gen(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
-    """K3: mentions x broadcast(aliases) on lowercase surface."""
-    return mentions.join(
-        F.broadcast(aliases),
-        F.lower(mentions["surface"]) == aliases["alias"],
-        "inner",
-    )
-
-
-@pandas_udf(ArrayType(FloatType()))
-def _surface_embedding_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    cache: dict[str, list[float]] = {}
-    for s in it:
-        out = []
-        for surf in s:
-            v = cache.get(surf)
-            if v is None:
-                v = [float(x) for x in V.surface_embedding(surf)]
-                cache[surf] = v
-            out.append(v)
-        yield pd.Series(out)
-
-
-def cosine_expr(a: str, b: str):
-    """UDF-free cosine for L2-normalized array<float> columns:
-    dot product via zip_with + aggregate (stays in codegen)."""
-    return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _verdicts(alias_pdf: pd.DataFrame, entity_vecs: DataFrame, k: int) -> pd.DataFrame:
@@ -100,8 +60,8 @@ def alias_verdicts_local(
     RDD).
 
     Computed on the driver in one numpy pass. The cosine is the same
-    arithmetic as ``cosine_expr`` (gated bit for bit against
-    ``rerank`` in tests): float32 element products, then a SEQUENTIAL
+    arithmetic as tests/reference.py's ``cosine_expr`` (gated bit for
+    bit against its ``rerank``): float32 element products, then a SEQUENTIAL
     float64 fold — ``np.cumsum`` accumulates left to right, a pairwise
     ``.sum()`` would not. Driver memory is bounded by the dictionary:
     aliases x 64 x 4 B for the stacked vectors, plus one embedding per
@@ -128,24 +88,4 @@ def compile_dictionary(aliases: DataFrame, entity_vecs: DataFrame) -> DataFrame:
     )
     return aliases.sparkSession.createDataFrame(
         out, schema="alias string, entity_id long, component long"
-    )
-
-
-def rerank(candidates: DataFrame, entity_vecs: DataFrame, k: int = 1) -> DataFrame:
-    """K4 per mention: cosine(mention vec, entity vec), keep top-k by
-    a window over ``mention_id``. The shape a sentence-contextual
-    encoder would need; for the context-free encoder it equals the
-    join against ``alias_verdicts_local``."""
-    with_vec = candidates.withColumn(
-        "mention_vec", _surface_embedding_udf(F.col("surface"))
-    ).join(F.broadcast(entity_vecs), "entity_id", "inner")
-    scored = with_vec.withColumn(
-        "cosine", cosine_expr("mention_vec", "embedding")
-    ).drop("mention_vec", "embedding")
-    w = Window.partitionBy("mention_id").orderBy(
-        F.desc("cosine"), F.asc("entity_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
     )

@@ -162,8 +162,9 @@ class _Model:
     # measured 12.4 -> 0.6 us/sentence on the bench fixture with
     # OUTPUT IDENTICAL to forward_tags (argmax over the same cached
     # float32 logits row, same first-index tie-break; asserted in
-    # tests/test_ner_model.py). forward_tags stays as the
-    # batched/padded reference shape for the visible M5 operator.
+    # tests/test_ner.py::test_word_tag_memo_equals_forward_tags).
+    # forward_tags stays as the batched/padded reference shape for the
+    # visible M5 operator.
     _WORD_TAG_CACHE_MAX = 1 << 20  # bound worker memory on open vocab
 
     def tags_of(self, sent_words: list[list[str]]) -> list[list[str]]:
@@ -221,7 +222,7 @@ _SPANS_SCHEMA = StructType(
 @pandas_udf(_SPANS_SCHEMA)
 def _detect_spans_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     """M4..M7 in ONE JVM<->Python crossing: tokenize+forward+align+BIO
-    decode inside the same Arrow batch (the staged K2 stage; the
+    decode inside the same Arrow batch (the staged oracle's K2; the
     separate tag/decode UDFs remain for per-op tests and queries)."""
     from kg.ner.bio import decode_bio
 
@@ -240,7 +241,9 @@ def _detect_spans_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
 
 def detect_mentions(df: DataFrame) -> DataFrame:
     """sentences(url, sent_id, words) -> mentions table, one fused
-    Arrow stage + Catalyst explode/slice for surfaces.
+    Arrow stage + Catalyst explode/slice for surfaces. The staged
+    oracle's K2 (``kg.pipeline.stage_mentions``): no shipped output
+    reaches it; ``kg.pipeline.mentions`` ships the same rows.
 
     Each mention row keeps its sentence's ``words``: K6's between-text
     then needs NO join back to the sentences table (saves a full

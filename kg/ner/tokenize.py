@@ -4,7 +4,8 @@ The reference splits raw text into sentences and whitespace/punct
 word tokens before subword encoding (SURVEY.md §2.A M2/M3, [R]).
 Both ops here stay entirely JVM-side (whole-stage codegen), which is
 the Spark-first answer: regex split + posexplode instead of a Python
-tokenizer loop.
+tokenizer loop. Only the staged oracle (``kg.pipeline.stage_sentences``)
+runs them; the crossing splits with their pyarrow twins.
 """
 
 from __future__ import annotations

@@ -22,11 +22,16 @@ regexes), the tagging (once per distinct word), the BIO decode
 does not depend on the dictionary: a dictionary update re-runs only
 ``components`` and ``triples``. ``components`` is dictionary-sized and
 compiled on the driver (``kg.link.compile_dictionary``), so linking
-and canonicalization are one broadcast join per side. The staged
-K1..K8 operators (``stage_extract`` .. ``stage_triples``) compute the
-same triples one table at a time; they back the driver's
-kg_mentions/kg_linked queries, the streaming path and the turbo-
-versus-staged equality gate.
+and canonicalization are one broadcast join per side.
+
+The crossing's mentions mode (``mentions``: the same span step, one
+row per span) backs the driver's kg_mentions/kg_linked and the
+mentions stream. The staged operators (``stage_extract``,
+``stage_sentences``, ``stage_mentions``, ``stage_triples_raw``,
+``stage_triples``) compute the same mentions and triples one table at
+a time through ``html_to_text``, the Catalyst split and
+``detect_mentions``. No shipped output reaches them: they are the
+tests' oracle for the kernel.
 """
 
 from __future__ import annotations
@@ -84,7 +89,7 @@ def salt_repartition(
 
 
 def stage_extract(pages: DataFrame) -> DataFrame:
-    """K1: Arrow-UDF extraction.
+    """K1: Arrow-UDF extraction (staged oracle: no shipped output).
 
     Projection before the UDF is explicit: only (url, warc_ts, lang,
     html) enter; `html` is dropped on the other side."""
@@ -92,14 +97,15 @@ def stage_extract(pages: DataFrame) -> DataFrame:
 
 
 def stage_sentences(text_extracted: DataFrame) -> DataFrame:
-    """M2+M3: sentence split + word tokenize (pure Catalyst)."""
+    """M2+M3: Catalyst split + tokenize (staged oracle: no shipped output)."""
     return tokenize_words(split_sentences(text_extracted.select("url", "text")))
 
 
 def stage_mentions(sentences: DataFrame) -> DataFrame:
     """K2 core: batched NER inference (M4-M6) + BIO decode (M7), fused
     into a single Arrow crossing; mentions carry the sentence tokens
-    so K6 needs no join back to the sentences table."""
+    so K6 needs no join back to the sentences table. Staged oracle:
+    no shipped output; ``mentions`` ships the same rows."""
     from kg.ner.model import detect_mentions
 
     return detect_mentions(sentences.select("url", "sent_id", "words"))
@@ -113,7 +119,7 @@ def stage_linked(
     (``kg.link.alias_verdicts_local``; the context-free encoder makes
     the verdict a function of the dictionary). Adds the verdict's
     (entity_id, alias, prior, cosine, rank) columns. Equivalent to
-    rerank(candidate_gen(...)) — asserted in tests."""
+    rerank(candidate_gen(...)) of tests/reference.py (test_link)."""
     verdict = alias_verdicts_local(aliases, entity_vecs)
     return mentions.join(
         F.broadcast(verdict),
@@ -126,7 +132,8 @@ def stage_triples_raw(
     linked: DataFrame, sentences: DataFrame | None = None
 ) -> DataFrame:
     """K5 pair gen + K6 relation rules: grouped single-shuffle pair
-    generation over mentions that carry their sentence tokens.
+    generation over mentions that carry their sentence tokens (staged
+    oracle: no shipped output).
     ``sentences`` is ignored (the tokens come with the mentions); it
     stays so callers that still pass the sentences table keep working."""
     return extract_relations(pair_gen_grouped(linked))
@@ -146,9 +153,9 @@ def _dedup_triples(df: DataFrame) -> DataFrame:
 
 
 def stage_triples(triples_raw: DataFrame, components: DataFrame) -> DataFrame:
-    """K8 as its own step (``run_pipeline`` folds it into the link
-    joins): entity ids -> component ids (two broadcast joins against
-    the KB-sized component map), dedup, keep provenance."""
+    """K8 as its own step, for the staged oracle (``run_pipeline``
+    folds it into the link joins): entity ids -> component ids (two
+    broadcast joins against the KB-sized component map), dedup."""
     comp = F.broadcast(components)
 
     def relabel(df: DataFrame, entity: str, out: str) -> DataFrame:
@@ -261,6 +268,18 @@ _MATCH_SCHEMA = StructType(
 )
 _MATCH_ARROW_SCHEMA = to_arrow_schema(_MATCH_SCHEMA)
 
+_MENTION_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("sent_id", IntegerType()),
+        StructField("ent_type", StringType()),
+        StructField("begin", IntegerType()),
+        StructField("end", IntegerType()),
+        StructField("surface", StringType()),
+    ]
+)
+_MENTION_ARROW_SCHEMA = to_arrow_schema(_MENTION_SCHEMA)
+
 # pages per kernel pass: an Arrow batch (up to maxRecordsPerBatch
 # pages) is cut into slices of this many, so the flat word, tag and
 # span arrays a worker holds are bounded by the slice. On fixture
@@ -315,18 +334,15 @@ def _split_columnar(texts: pa.Array) -> tuple[np.ndarray, np.ndarray, pa.Array]:
     return page[kept], pos[kept], pc.ascii_split_whitespace(sents.filter(keep))
 
 
-def _match_slice(urls: pa.Array, htmls: pa.Array, model, rules) -> pa.RecordBatch:
-    """The kernel on one slice of pages: (url, html) Arrow arrays ->
-    a ``_MATCH_SCHEMA`` RecordBatch, rows in (page, sentence, subject
-    span, object span) order. Only extraction loops over pages; the
-    split, the tagging, the BIO decode and the rule match each run
-    once over the whole slice."""
+def _span_slice(htmls: pa.Array, model) -> tuple:
+    """The kernel's span step on one slice of pages: extract, split,
+    tag each distinct word once, BIO-decode. Returns the sentences'
+    (page, sent_id), the flat words and their sentence offsets, and the
+    spans' flat (begin, end, type code, sentence), in page order."""
     from kg.extract import extract_text_auto
     from kg.ner import vocab as V
     from kg.ner.bio import decode_bio_flat
-    from kg.relations import MAX_RULE_WORDS
 
-    keys, preds, confs = rules
     texts = pa.array([extract_text_auto(h) for h in htmls.to_pylist()], pa.string())
     page, sent_id, split = _split_columnar(texts)
     words = pc.list_flatten(split)
@@ -335,12 +351,23 @@ def _match_slice(urls: pa.Array, htmls: pa.Array, model, rules) -> pa.RecordBatc
     enc = pc.dictionary_encode(words)
     word_tags = model.tags_of([enc.dictionary.to_pylist()])[0]
     tag_code = np.array([V.LABEL_TO_ID[t] for t in word_tags], dtype=np.int8)
-    begin, end, _ = decode_bio_flat(tag_code[enc.indices.to_numpy()], woff, V.LABELS)
+    begin, end, typ = decode_bio_flat(tag_code[enc.indices.to_numpy()], woff, V.LABELS)
+    sent = (np.searchsorted(woff, begin, side="right") - 1).astype(np.int32)
+    return page, sent_id, words, woff, begin, end, typ, sent
+
+
+def _pair_slice(urls: pa.Array, spans: tuple, rules) -> pa.RecordBatch:
+    """The pair step: a slice's spans (``_span_slice``) -> a
+    ``_MATCH_SCHEMA`` RecordBatch of rule-matched span pairs, rows in
+    (page, sentence, subject span, object span) order."""
+    from kg.relations import MAX_RULE_WORDS
+
+    page, sent_id, words, _, begin, end, _, sent = spans
+    keys, preds, confs = rules
     # candidate pairs: span i with span i+k of the same sentence, for
     # each k that can still leave 1..MAX_RULE_WORDS words between them
     # (every span in between takes a word); built row-major, so they
     # come out in (i, j) order
-    sent = (np.searchsorted(woff, begin, side="right") - 1).astype(np.int32)
     ks = np.arange(1, MAX_RULE_WORDS + 2, dtype=np.int32)
     i = np.repeat(np.arange(len(begin), dtype=np.int32), len(ks))
     j = i + np.tile(ks, len(begin))
@@ -374,14 +401,52 @@ def _match_slice(urls: pa.Array, htmls: pa.Array, model, rules) -> pa.RecordBatc
     )
 
 
+def _match_slice(urls: pa.Array, htmls: pa.Array, model, rules) -> pa.RecordBatch:
+    """The kernel on one slice of pages: (url, html) Arrow arrays ->
+    a ``_MATCH_SCHEMA`` RecordBatch, span step then pair step."""
+    return _pair_slice(urls, _span_slice(htmls, model), rules)
+
+
+def _mention_slice(urls: pa.Array, htmls: pa.Array, model) -> pa.RecordBatch:
+    """The kernel's mentions mode on one slice of pages: the span step,
+    then one ``_MENTION_SCHEMA`` row per span, with ``begin``/``end``
+    relative to the sentence, in (page, sentence, span) order."""
+    from kg.ner import vocab as V
+    from kg.ner.bio import label_tables
+
+    page, sent_id, words, woff, begin, end, typ, sent = _span_slice(htmls, model)
+    types = pa.array(label_tables(tuple(V.LABELS))[2], pa.string())
+    return pa.RecordBatch.from_arrays(
+        [
+            urls.take(pa.array(page[sent])).cast(pa.string()),
+            pa.array(sent_id[sent], pa.int32()),
+            types.take(pa.array(typ)),
+            pa.array(begin - woff[sent], pa.int32()),
+            pa.array(end - woff[sent], pa.int32()),
+            _join_ranges(words, begin, end),
+        ],
+        schema=_MENTION_ARROW_SCHEMA,
+    )
+
+
+def _kernel_slices(batches, step):
+    """The crossing's slicing loop: ``step(urls, htmls)`` once per slice
+    of ``KERNEL_SLICE_PAGES`` pages of each Arrow batch, one output
+    batch each."""
+    for b in batches:
+        urls, htmls = b.column("url"), b.column("html")
+        # a 0-row batch still yields one (empty) output batch
+        for s in range(0, max(b.num_rows, 1), KERNEL_SLICE_PAGES):
+            yield step(urls.slice(s, KERNEL_SLICE_PAGES), htmls.slice(s, KERNEL_SLICE_PAGES))
+
+
 def _matched_pairs_arrow(batches):
     """mapInArrow kernel: html -> rule-matched co-sentence span pairs
     in ONE JVM<->Python crossing (guide §8: every decision downstream
     of here needs only these few bytes per match — the page text,
     token arrays and unmatched pair space never cross back to the
     JVM, never shuffle). Per-worker state (scorer weights, word-tag
-    memo) initializes once (guide §4.5). Each Arrow batch is cut into
-    slices of ``KERNEL_SLICE_PAGES`` pages, one output batch each."""
+    memo) initializes once (guide §4.5)."""
     from kg.ner.model import _Model
     from kg.relations import CONFIDENCE_THRESHOLD, RELATION_RULES
 
@@ -395,16 +460,21 @@ def _matched_pairs_arrow(batches):
         pa.array([p for p, _ in table.values()], pa.string()),
         pa.array([c for _, c in table.values()], pa.float64()),
     )
-    for b in batches:
-        urls, htmls = b.column("url"), b.column("html")
-        # a 0-row batch still yields one (empty) output batch
-        for s in range(0, max(b.num_rows, 1), KERNEL_SLICE_PAGES):
-            yield _match_slice(
-                urls.slice(s, KERNEL_SLICE_PAGES),
-                htmls.slice(s, KERNEL_SLICE_PAGES),
-                model,
-                rules,
-            )
+    yield from _kernel_slices(
+        batches, lambda urls, htmls: _match_slice(urls, htmls, model, rules)
+    )
+
+
+def _mentions_arrow(batches):
+    """mapInArrow kernel, mentions mode: html -> typed entity spans in
+    ONE JVM<->Python crossing, by the same span step as
+    ``_matched_pairs_arrow``."""
+    from kg.ner.model import _Model
+
+    model = _Model.get()
+    yield from _kernel_slices(
+        batches, lambda urls, htmls: _mention_slice(urls, htmls, model)
+    )
 
 
 def _matched_pairs_gen(batches):
@@ -428,6 +498,23 @@ def matched_pairs(pages: DataFrame) -> DataFrame:
     so the output is dictionary-independent."""
     return pages.select("url", "html").mapInArrow(
         _matched_pairs_arrow, _MATCH_SCHEMA
+    )
+
+
+def mentions(pages: DataFrame) -> DataFrame:
+    """The crossing in mentions mode: (url, html) -> ``detect_mentions``'
+    columns less ``words``. The spans come from ``mapInArrow`` over
+    ``_mentions_arrow``; Catalyst adds ``mention_id`` and ``score``."""
+    spans = pages.select("url", "html").mapInArrow(_mentions_arrow, _MENTION_SCHEMA)
+    return spans.select(
+        "url",
+        "sent_id",
+        F.xxhash64("url", "sent_id", "begin").alias("mention_id"),
+        "ent_type",
+        "begin",
+        "end",
+        "surface",
+        F.lit(1.0).alias("score"),
     )
 
 

@@ -3,9 +3,9 @@
 K5 (BASELINE.json:6 "co-sentence entity pairs"): ``pair_gen_grouped``
 groups the linked mentions by sentence (url, sent_id) in ONE shuffle
 and explodes each group's ordered pairs (subject textual-first) in
-memory, bounded by ``MAX_RULE_WORDS``. ``pair_gen`` is the same pair
-set as a self-join on (url, sent_id) with a textual-order residual,
-kept as the reference the grouped generator is tested against.
+memory, bounded by ``MAX_RULE_WORDS``. tests/reference.py's
+``pair_gen`` builds the same pair set as a self-join, the reference
+the grouped generator is tested against.
 
 K6: deterministic predicate rules over the between-mention text,
 sliced from the sentence tokens the mentions carry. Entirely Catalyst
@@ -35,36 +35,6 @@ CONFIDENCE_THRESHOLD = 0.5
 # generators drop such pairs, so a sentence with thousands of spans
 # yields O(spans) candidate pairs instead of O(spans^2).
 MAX_RULE_WORDS = max(len(t.split(" ")) for t, _, _ in RELATION_RULES)
-
-
-def pair_gen(linked: DataFrame) -> DataFrame:
-    """K5 reference: ordered co-sentence mention pairs (subject
-    textual-first) as a self-join, the oracle for ``pair_gen_grouped``.
-
-    Shuffle-hash hinted: sentence keys are high-cardinality and the
-    per-key groups are tiny, so hashing beats the sort-merge default."""
-    m1 = linked.select(
-        "url",
-        "sent_id",
-        F.col("mention_id").alias("subj_mention"),
-        F.col("entity_id").alias("subj_entity"),
-        F.col("ent_type").alias("subj_type"),
-        F.col("begin").alias("subj_begin"),
-        F.col("end").alias("subj_end"),
-    )
-    m2 = linked.select(
-        "url",
-        "sent_id",
-        F.col("mention_id").alias("obj_mention"),
-        F.col("entity_id").alias("obj_entity"),
-        F.col("ent_type").alias("obj_type"),
-        F.col("begin").alias("obj_begin"),
-        F.col("end").alias("obj_end"),
-    )
-    return m1.join(m2.hint("shuffle_hash"), ["url", "sent_id"], "inner").filter(
-        (F.col("subj_begin") < F.col("obj_begin"))
-        & (F.col("obj_begin") - F.col("subj_end") <= MAX_RULE_WORDS)
-    )
 
 
 def pair_gen_grouped(linked: DataFrame) -> DataFrame:

@@ -282,17 +282,16 @@ def pages_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stream_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The K1+M2-M7 stack ON A STREAM: extract -> sentence split ->
-    fused NER, the exact batch stage functions applied to a streaming
-    DataFrame (they are per-row Arrow/Catalyst transforms, so Spark
-    accepts them unchanged), aggregated to per-ent_type mention counts
-    in complete mode. Stream == batch equality is gated in
-    tests/test_streaming.py; the driver row is rows-only (the NER
-    stack is not SQL-expressible)."""
-    from kg.pipeline import stage_extract, stage_mentions, stage_sentences
+    """The K1+M2-M7 stack ON A STREAM: the crossing's mentions mode
+    (``kg.pipeline.mentions``, the one mapInArrow kernel that also
+    yields the batch ``kg_mentions``) applied to a streaming DataFrame
+    (it is a per-row Arrow transform, so Spark accepts it unchanged),
+    aggregated to per-ent_type mention counts in complete mode. Stream
+    == staged-batch equality is gated in tests/test_streaming.py; the
+    driver row is rows-only (the NER stack is not SQL-expressible)."""
+    from kg.pipeline import mentions
 
-    mentions = stage_mentions(stage_sentences(stage_extract(pages_stream(spark, sf_dir))))
-    agg = mentions.groupBy("ent_type").agg(
+    agg = mentions(pages_stream(spark, sf_dir)).groupBy("ent_type").agg(
         F.count(F.lit(1)).alias("n_mentions"),
         # COUNT(DISTINCT) is not allowed on streams; bit_xor of url
         # hashes is an order-insensitive content checksum instead

@@ -180,22 +180,51 @@ def main() -> int:
     # the shipped lazy triples: that crossing, one broadcast join per
     # side against the compiled dictionary (a local relation), and the
     # dedup as the only hash exchange
+    def local_broadcasts(p: str) -> int:
+        """BroadcastHashJoin count, or -1 unless every build side is a
+        LocalTableScan."""
+        lines = p.splitlines()
+        builds = [lines[k + 1] for k, ln in enumerate(lines) if "BroadcastExchange" in ln]
+        n = p.count("BroadcastHashJoin")
+        ok = len(builds) == n and all("+- LocalTableScan" in b for b in builds)
+        return n if ok else -1
+
     lazy = P.run_pipeline(
         spark, pages, FX.aliases_df(spark), FX.entity_vecs_df(spark)
     )["triples"]
     plazy = plan_of(lazy)
-    lines = plazy.splitlines()
-    builds = [lines[k + 1] for k, ln in enumerate(lines) if "BroadcastExchange" in ln]
     check(
         "lazy triples: 1 Python boundary, 2 broadcast joins of local tables, "
         "1 hash Exchange",
         arrow_count(lazy) == 1
         and "Python" not in plazy
-        and plazy.count("BroadcastHashJoin") == 2
-        and len(builds) == 2
-        and all("+- LocalTableScan" in b for b in builds)
+        and local_broadcasts(plazy) == 2
         and plazy.count("Exchange hashpartitioning") == 1,
         plazy,
+    )
+
+    # the driver's mentions and linked mentions: the crossing's
+    # mentions mode, then one verdict broadcast join. Their page source
+    # (the fixture generator) is a MapInPandas of its own, so count the
+    # boundaries above it
+    all_q = __import__("__spark_entry__").all_queries()
+    n_src = arrow_count(FX.pages_from_documents(spark, sf_dir))
+    km = all_q["kg_mentions"](spark, sf_dir)
+    pkm = plan_of(km)
+    check(
+        "driver kg_mentions: exactly 1 Python boundary above the page source",
+        arrow_count(km) - n_src == 1 and "Python" not in pkm,
+        pkm,
+    )
+    kl = all_q["kg_linked"](spark, sf_dir)
+    pkl = plan_of(kl)
+    check(
+        "driver kg_linked: 1 Python boundary above the page source, "
+        "1 broadcast join of a local table",
+        arrow_count(kl) - n_src == 1
+        and "Python" not in pkl
+        and local_broadcasts(pkl) == 1,
+        pkl,
     )
 
     text = P.stage_extract(pages)
@@ -298,7 +327,6 @@ def main() -> int:
     # --- r6 additions -----------------------------------------------------
     # multi-n decontamination must keep the single-n shape: every gram
     # width evaluates in ONE map-only projection (no join, no shuffle)
-    all_q = __import__("__spark_entry__").all_queries()
     pdm = plan_of(all_q["text_decontaminate_multi"](spark, sf_dir))
     check(
         "decontaminate_multi is map-only (zero Exchange, zero Join)",

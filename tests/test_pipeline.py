@@ -261,6 +261,50 @@ def test_long_sentence_turbo_equals_staged(spark):
     assert turbo == staged
 
 
+def test_kernel_mentions_equal_staged(spark):
+    """The crossing's mentions mode equals the staged K1+M2-M7 chain
+    less its words, as a multiset over every column (mention_id
+    included) and with the same column types: on fixture pages, clean
+    and noisy, plus a null-html row, the long-sentence list pages and
+    a page whose surfaces are not ASCII."""
+    from collections import Counter
+
+    import pandas as pd
+
+    from kg.pipeline import mentions, stage_extract, stage_mentions, stage_sentences
+
+    accents = (
+        "<p>Alind\u00e1 Marchetti works at Bramblec\u00f6re Labs .</p>"
+        "<p>Brinev\u00e1le met Cedrik\u6771 Sablethorn .</p>"
+    ).encode()
+    urls = ["https://x.example/null", "https://x.example/accents"] + [
+        f"https://lists.example.net/l/{s}" for s in (1, 2)
+    ]
+    odd = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "url": urls,
+                "warc_ts": [None] * 4,
+                "html": [None, accents] + [_list_page_html(150, seed=s) for s in (1, 2)],
+                "text": [None] * 4,
+                "lang": ["en"] * 4,
+            }
+        ),
+        FX.PAGES_SCHEMA,
+    )
+    for noise in (0.0, 0.05):
+        pages = FX.gen_pages(spark, 150, seed=11, noise=noise).unionByName(odd)
+        staged = stage_mentions(stage_sentences(stage_extract(pages))).drop("words")
+        kernel = mentions(pages)
+        assert kernel.dtypes == staged.dtypes
+        want = Counter(map(tuple, staged.collect()))
+        got = Counter(map(tuple, kernel.collect()))
+        assert got == want, f"noise={noise}: {len(got)} kernel vs {len(want)} staged"
+        surfaces = {r[6] for r in got if r[0] == "https://x.example/accents"}
+        assert sum(not s.isascii() for s in surfaces) >= 3, surfaces
+        assert sum(n for r, n in got.items() if r[0].startswith("https://lists.")) > 300
+
+
 def test_long_sentence_crossing_is_bounded():
     """A ~1500-span sentence costs the crossing milliseconds, not the
     O(spans^2 x gap) of an unbounded pair loop (~50 s), and every

@@ -1,6 +1,7 @@
 """K5/K6: grouped pair generation must equal the generic self-join."""
 
-from kg.relations import extract_relations, pair_gen, pair_gen_grouped
+from kg.relations import extract_relations, pair_gen_grouped
+from tests.reference import pair_gen
 
 
 def _linked_df(spark):

@@ -35,9 +35,10 @@ def test_session_counts_events_conserved(spark):
 
 
 def test_stream_kg_mentions_equals_batch(spark):
-    """The NER stack over a file STREAM must produce byte-identical
-    per-type counts and content checksums to the same stages run in
-    batch — the claim that one code path serves both."""
+    """The crossing's mentions mode over a file STREAM must produce
+    byte-identical per-type counts and content checksums to the staged
+    K1+M2-M7 chain run in batch — one kernel serves the stream, and it
+    agrees with the independent staged implementation."""
     import pyspark.sql.functions as F
 
     from kg.fixtures import pages_from_documents
