@@ -212,14 +212,10 @@ def decontaminate(
     phrase could never equal any n-gram, and a decontamination op that
     silently matches nothing is the worst failure mode (eval leakage
     passes unflagged) — hence the hard check, not a docstring caveat.
-    One call sweeps ONE n; a real decontamination pass runs several
-    (e.g. n in {8, 13} word-grams) and ORs the flags."""
-    hits = _decon_hits(n, _decon_normalize(phrases, n))
-    return docs.select(
-        "doc_id",
-        hits.cast("long").alias("n_banned_hits"),
-        (hits > 0).cast("int").alias("contaminated"),
-    )
+    One call sweeps ONE n: it is ``decontaminate_multi`` with a
+    single width; a real decontamination pass runs several (e.g. n in
+    {8, 13} word-grams) and ORs the flags."""
+    return decontaminate_multi(docs, {n: phrases})
 
 
 def _decon_normalize(phrases: list[str], n: int) -> list[str]:
@@ -255,8 +251,8 @@ def _decon_hits(n: int, norm: list[str]):
 def decontaminate_multi(
     docs: DataFrame, phrases_by_n: dict[int, list[str]]
 ) -> DataFrame:
-    """The real decontamination pass the single-n docstring promises:
-    sweep SEVERAL gram widths (e.g. n in {8, 13}) in one call and OR
+    """The decontamination pass (``decontaminate`` is its one-width
+    call): sweep SEVERAL gram widths (e.g. n in {8, 13}) in one call and OR
     the flags. All widths evaluate in the SAME map-only projection —
     no join, no shuffle, one corpus pass regardless of how many n's —
     so the 100 TB cost is identical to one single-n sweep plus the

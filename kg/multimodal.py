@@ -29,7 +29,6 @@ DECODED_SCHEMA = (
     "payload_bytes long"
 )
 FEATURES_SCHEMA = "asset_id long, features array<double>"
-FRAMES_SCHEMA = "asset_id long, frame_idx int, frame_offset long"
 
 _MAGIC = {"image": b"KGIM", "audio": b"KGAU", "video": b"KGVD"}
 

@@ -2,13 +2,14 @@
 checkpoint/resume orchestration, and X3 per-partition lineage +
 metrics tables (BASELINE.json:6,14).
 
-Dataflow (``run_pipeline``; with a checkpoint root every named
-output is a materialized, resumable table):
+Dataflow (``run_pipeline``; with a checkpoint root the two
+corpus-sized outputs are materialized, resumable tables):
 
     pages(url, html) --one mapInArrow crossing: K1 extract, M2/M3 split,
           M4-M7 NER+BIO, K5/K6 pair + relation rules--> matched_pairs
-    aliases x entity_vecs --driver compile: K3/K4 verdict + K7 same-as
-          components--> components(alias -> entity_id, component)
+    aliases x entity_vecs --driver compile on every run: K3/K4 verdict
+          + K7 same-as components--> dictionary(alias -> entity_id,
+          component), an in-plan local table
     matched_pairs --two broadcast joins (subject, object surface),
           K8 dedup--> triples (partitioned by pred)
 
@@ -20,9 +21,10 @@ regexes), the tagging (once per distinct word), the BIO decode
 
 ``matched_pairs`` holds rule-matched surfaces, not entity ids, so it
 does not depend on the dictionary: a dictionary update re-runs only
-``components`` and ``triples``. ``components`` is dictionary-sized and
-compiled on the driver (``kg.link.compile_dictionary``), so linking
-and canonicalization are one broadcast join per side.
+``triples``. The dictionary (one row per alias) is compiled on the
+driver (``kg.link.compile_dictionary``, ~0.1 s) on every run rather
+than checkpointed, and linking and canonicalization are one broadcast
+join per side.
 
 The crossing's mentions mode (``mentions``: the same span step, one
 row per span) backs the driver's kg_mentions/kg_linked and the
@@ -173,9 +175,9 @@ def stage_triples(triples_raw: DataFrame, components: DataFrame) -> DataFrame:
 class Orchestrator:
     """X2 checkpoint/resume + X3 lineage/metrics.
 
-    ``run_pipeline`` stages three tables through it: ``matched_pairs``
-    (the Arrow crossing's output, a few bytes per match),
-    ``components`` and ``triples``. Each stage writes its output table
+    ``run_pipeline`` stages its two corpus-sized tables through it:
+    ``matched_pairs`` (the Arrow crossing's output, a few bytes per
+    match) and ``triples``. Each stage writes its output table
     under ``root/<stage>`` plus a per-partition metrics table under
     ``root/_metrics/<stage>``, then reads the table back. On
     rerun, a stage whose output exists (parquet _SUCCESS marker) is
@@ -401,12 +403,6 @@ def _pair_slice(urls: pa.Array, spans: tuple, rules) -> pa.RecordBatch:
     )
 
 
-def _match_slice(urls: pa.Array, htmls: pa.Array, model, rules) -> pa.RecordBatch:
-    """The kernel on one slice of pages: (url, html) Arrow arrays ->
-    a ``_MATCH_SCHEMA`` RecordBatch, span step then pair step."""
-    return _pair_slice(urls, _span_slice(htmls, model), rules)
-
-
 def _mention_slice(urls: pa.Array, htmls: pa.Array, model) -> pa.RecordBatch:
     """The kernel's mentions mode on one slice of pages: the span step,
     then one ``_MENTION_SCHEMA`` row per span, with ``begin``/``end``
@@ -461,7 +457,8 @@ def _matched_pairs_arrow(batches):
         pa.array([c for _, c in table.values()], pa.float64()),
     )
     yield from _kernel_slices(
-        batches, lambda urls, htmls: _match_slice(urls, htmls, model, rules)
+        batches,
+        lambda urls, htmls: _pair_slice(urls, _span_slice(htmls, model), rules),
     )
 
 
@@ -565,14 +562,18 @@ def run_pipeline(
     checkpoint_root: str | None = None,
     components: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """html -> triples as ``matched_pairs`` -> ``components`` (the
-    compiled dictionary, alias -> (entity_id, component)) ->
-    ``triples`` (module docstring). Without ``checkpoint_root`` this
-    is one lazy plan. With it, each output is a materialized resumable
-    table under ``checkpoint_root/<name>`` (``Orchestrator``): a rerun
-    skips completed outputs, and deleting ``components`` re-links the
-    stored matched pairs without re-running the crossing. Returns the
-    three DataFrames (plus ``_orchestrator`` when checkpointing).
+    """html -> triples as ``matched_pairs``, linked against the
+    dictionary compiled from ``aliases`` x ``entity_vecs`` (alias ->
+    (entity_id, component)), -> ``triples`` (module docstring). Without
+    ``checkpoint_root`` this is one lazy plan. With it, ``matched_pairs``
+    and ``triples`` are materialized resumable tables under
+    ``checkpoint_root/<name>`` (``Orchestrator``): a rerun skips
+    completed outputs, and deleting ``triples`` re-links the stored
+    matched pairs without re-running the crossing. The dictionary is
+    compiled on every call, so a resumed run links with the dictionary
+    it is given. Returns ``matched_pairs``, ``triples`` and the
+    dictionary as ``components`` (plus ``_orchestrator`` when
+    checkpointing).
 
     ``components`` is ignored: the dictionary compile always derives
     the same-as components itself, in the same driver pass as the
@@ -584,14 +585,7 @@ def run_pipeline(
         return orch.run_stage(name, fn, partition_by) if orch else fn()
 
     matched = stage("matched_pairs", lambda: matched_pairs(pages))
-    dictionary = stage(
-        "components", lambda: compile_dictionary(aliases, entity_vecs)
-    )
-    if "alias" not in dictionary.columns:
-        raise ValueError(
-            f"{checkpoint_root}/components is an older (id, component) map, not"
-            " the compiled alias dictionary: rebuild it with --stage components"
-        )
+    dictionary = compile_dictionary(aliases, entity_vecs)
     triples = stage(
         "triples",
         lambda: _dedup_triples(link_pairs(matched, dictionary)),

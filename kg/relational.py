@@ -63,7 +63,6 @@ def cents(col: str):
 # review finding — verified: RE2 '\s+' does NOT split on chr(11)).
 # Every whitespace tokenizer below uses THIS class on BOTH sides.
 WS_REGEX = "[ \\t\\n\\x0B\\f\\r]+"
-_SQL_WS_REGEX = "[ \\t\\n\\x0B\\f\\r]+"
 
 
 def ws_tokens(col, lower: bool = False):
@@ -79,7 +78,7 @@ def sql_ws_tokens(expr: str, lower: bool = False) -> str:
     """DuckDB twin of ws_tokens (same explicit whitespace class)."""
     e = f"lower({expr})" if lower else expr
     return (
-        f"list_filter(regexp_split_to_array({e}, '{_SQL_WS_REGEX}'), "
+        f"list_filter(regexp_split_to_array({e}, '{WS_REGEX}'), "
         "x -> x != '')"
     )
 

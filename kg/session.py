@@ -27,10 +27,24 @@ def build_session(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
     all cores) so bench/driver runs pick up the sandbox parallelism.
+
+    The directory that holds ``kg`` is appended to the Python workers'
+    ``PYTHONPATH`` (after any ``spark.executorEnv.PYTHONPATH`` in
+    ``extra_conf``), so UDF tasks import ``kg`` whatever the driver's
+    working directory.
     """
+    import kg
+
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    conf = dict(extra_conf or {})
+    env_key = "spark.executorEnv.PYTHONPATH"
+    paths = [p for p in conf.get(env_key, "").split(os.pathsep) if p]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(kg.__file__)))
+    if root not in paths:
+        paths.append(root)
+    conf[env_key] = os.pathsep.join(paths)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -67,7 +81,7 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -65,13 +65,19 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _run_available_now(result: DataFrame, name: str) -> DataFrame:
+def _run_available_now(
+    result: DataFrame, name: str, mode: str = "complete"
+) -> DataFrame:
+    """Run ``result`` to the end of its available input into a memory
+    sink and return the sink table. In update/append ``mode`` the sink
+    ACCUMULATES rows across batches: update callers reduce to final
+    state, append callers read the rows as-is."""
     spark = result.sparkSession
     sink = f"{name}_{uuid.uuid4().hex[:8]}"
     q = (
         result.writeStream.format("memory")
         .queryName(sink)
-        .outputMode("complete")
+        .outputMode(mode)
         .option("checkpointLocation", _scratch(f"ck_{name}_"))
         .trigger(availableNow=True)
         .start()
@@ -379,33 +385,13 @@ def stateful_running_totals(
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    sunk = _run_available_now_update(out, "stateful")
+    sunk = _run_available_now(out, "stateful", mode="update")
     if not reduce:
         return sunk  # raw per-batch emissions (tests inspect these)
     return sunk.groupBy("event_type").agg(
         F.max("n").alias("n"),
         F.max_by("value_c", "n").alias("value_c"),
     )
-
-
-def _run_available_now_update(
-    result: DataFrame, name: str, mode: str = "update"
-) -> DataFrame:
-    """Update/append-mode twin of _run_available_now (the memory sink
-    then ACCUMULATES rows across batches — update callers reduce to
-    final state; append callers read the rows as-is)."""
-    spark = result.sparkSession
-    sink = f"{name}_{uuid.uuid4().hex[:8]}"
-    q = (
-        result.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(mode)
-        .option("checkpointLocation", _scratch(f"ck_{name}_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
 
 
 @query(
@@ -532,7 +518,7 @@ def stream_stream_purchase_clicks(spark: SparkSession, sf_dir: str) -> DataFrame
         F.date_format("p_ts", "yyyy-MM-dd HH:mm:ss").alias("p_ts_s"),
         F.date_format("c_ts", "yyyy-MM-dd HH:mm:ss").alias("c_ts_s"),
     )
-    return _run_available_now_update(j, "ssjoin", mode="append")
+    return _run_available_now(j, "ssjoin", mode="append")
 
 
 @query(

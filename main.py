@@ -4,20 +4,19 @@
     zip -r pipeline.zip kg
     spark-submit --py-files pipeline.zip main.py \\
         --pages /data/pages_parquet --out /data/kg_out \\
-        [--stage all|matched_pairs|components|triples] \\
+        [--stage all|matched_pairs|triples] \\
         [--n-pages 50000]  (generate the synthetic fixture instead)
 
-Three stage tables land under --out: ``matched_pairs`` (the one Arrow
-crossing's rule-matched surface pairs), ``components`` (the compiled
-alias dictionary: alias -> (entity_id, component), each alias's
-linked entity and that entity's same-as component) and ``triples``
-(partitioned by pred).
+Two stage tables land under --out: ``matched_pairs`` (the one Arrow
+crossing's rule-matched surface pairs) and ``triples`` (partitioned
+by pred). The alias dictionary they are linked with (alias ->
+(entity_id, component)) is compiled on the driver on every run.
 The orchestrator is checkpoint-resumable: rerunning skips completed
 stages (their `_SUCCESS` marker exists), so a killed job continues
 where it stopped. `--stage X` forces recompute of X and everything
 after it by deleting those outputs first. `matched_pairs` holds
 surfaces, not entity ids, so after a dictionary update
-`--stage components` re-links the stored pairs without re-running the
+`--stage triples` re-links the stored pairs without re-running the
 crossing over the pages. The driver is stateless — all state lives in
 the stage tables (SURVEY.md §3.2).
 """
@@ -29,7 +28,7 @@ import json
 import sys
 import os
 
-STAGE_ORDER = ["matched_pairs", "components", "triples"]
+STAGE_ORDER = ["matched_pairs", "triples"]
 
 
 def main(argv: list[str] | None = None) -> int:

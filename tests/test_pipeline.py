@@ -85,26 +85,32 @@ def test_resume_equality_after_partial_kill(spark, clean_pages, clean_result):
         checkpoint_root=root,
     )
     skipped = {e["stage"] for e in res2["_orchestrator"].log if e["skipped"]}
-    assert {"matched_pairs", "components"} <= skipped
-    assert "triples" not in skipped
+    assert skipped == {"matched_pairs"}
     assert _triple_set(res2["triples"]) == before
 
 
-def test_old_components_checkpoint_names_stage_rerun(spark, tmp_path):
-    """A `components` table in the older (id, component) schema, read
-    back on resume, fails with a ValueError that says how to rebuild
-    it, not inside the link join."""
+def test_resume_ignores_old_components_checkpoint(spark, clean_pages, tmp_path):
+    """A checkpoint root left by a run that also staged the alias
+    dictionary: stored ``matched_pairs`` plus a ``components`` table in
+    the older (id, component) schema. The run resumes from the stored
+    pairs, leaves ``components/`` unread, and gives the same triples as
+    a clean run."""
     from kg import io
-    from kg.pipeline import stage_components
+    from kg.pipeline import matched_pairs, stage_components
 
     root = str(tmp_path / "kg")
+    io.write_table(matched_pairs(clean_pages), os.path.join(root, "matched_pairs"))
     io.write_table(stage_components(FX.aliases_df(spark)), os.path.join(root, "components"))
-    pages = FX.gen_pages(spark, 5, seed=42, noise=0.0)
-    with pytest.raises(ValueError, match="--stage components"):
-        run_pipeline(
-            spark, pages, FX.aliases_df(spark), FX.entity_vecs_df(spark),
-            checkpoint_root=root,
-        )
+    res = run_pipeline(
+        spark, clean_pages, FX.aliases_df(spark), FX.entity_vecs_df(spark),
+        checkpoint_root=root,
+    )
+    log = {e["stage"]: e["skipped"] for e in res["_orchestrator"].log}
+    assert log == {"matched_pairs": True, "triples": False}
+    clean = run_pipeline(
+        spark, clean_pages, FX.aliases_df(spark), FX.entity_vecs_df(spark)
+    )
+    assert _triple_set(res["triples"]) == _triple_set(clean["triples"])
 
 
 def test_lineage_metrics_written(spark, clean_result):
@@ -112,7 +118,11 @@ def test_lineage_metrics_written(spark, clean_result):
     assert m is not None
     rows = m.collect()
     stages = {r["stage"] for r in rows}
-    assert {"matched_pairs", "components", "triples"} <= stages
+    assert stages == {"matched_pairs", "triples"}
+    # the dictionary is compiled per run, never written
+    root = clean_result["_root"]
+    assert sorted(os.listdir(root)) == ["_metrics", "matched_pairs", "triples"]
+    assert sorted(os.listdir(os.path.join(root, "_metrics"))) == ["matched_pairs", "triples"]
     for r in rows:
         assert r["output_rows"] >= 0
         assert r["wall_ms"] > 0
@@ -459,10 +469,9 @@ def test_kernel_rows_equal_per_sentence_reference(spark, monkeypatch):
 
 def test_main_stage_rerun_relinks_without_crossing(spark, tmp_path, capsys):
     """main.py end to end, in process (build_session's getOrCreate
-    returns the test session): a plain run, then `--stage components`
-    recomputes components and triples from the stored matched_pairs,
-    with the same triples count. A removed stage name is an argparse
-    error."""
+    returns the test session): a plain run, then `--stage triples`
+    re-links the stored matched_pairs, with the same triples count.
+    A removed stage name is an argparse error."""
     import main
 
     argv = ["--n-pages", "100", "--out", str(tmp_path / "kg")]
@@ -476,16 +485,17 @@ def test_main_stage_rerun_relinks_without_crossing(spark, tmp_path, capsys):
     parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         first = run()
-        second = run("--stage", "components")
+        second = run("--stage", "triples")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", parts)
     assert [e["stage"] for e in first["stages"]] == main.STAGE_ORDER
     assert not any(e["skipped"] for e in first["stages"])
     skipped = {e["stage"]: e["skipped"] for e in second["stages"]}
-    assert skipped == {"matched_pairs": True, "components": False, "triples": False}
+    assert skipped == {"matched_pairs": True, "triples": False}
     assert second["triples"] == first["triples"] > 0
 
-    with pytest.raises(SystemExit) as exc:
-        main.main(argv + ["--stage", "mentions"])
-    assert exc.value.code == 2
-    assert "invalid choice: 'mentions'" in capsys.readouterr().err
+    for removed in ("mentions", "components"):
+        with pytest.raises(SystemExit) as exc:
+            main.main(argv + ["--stage", removed])
+        assert exc.value.code == 2
+        assert f"invalid choice: '{removed}'" in capsys.readouterr().err
